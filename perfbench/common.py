@@ -1,8 +1,10 @@
 """Process, session and statistics plumbing shared by the workloads.
 
 Everything the benchmark writes lives under ``<checkout>/.perfbench_work``:
-the Spark local dir, the JVM and Python temp dirs, crawl warehouses,
-generated analytics tables and the traced run's event log.
+the JVM and Python temp dirs, crawl warehouses, generated analytics
+tables and the traced run's event log. Spark's local dir is the one the
+program's ``session.get_spark`` picks; the benchmark only records which
+entries its sessions create there.
 """
 
 from __future__ import annotations
@@ -15,16 +17,18 @@ import signal
 import statistics
 import subprocess
 import sys
-import threading
 import time
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 WORK = os.path.join(ROOT, ".perfbench_work")
 CORES = 4  # local[4], the tier-1 SPARK_GRAFT_CPUS on a 4-core box
-# Marks the JVM of a run started from this checkout, so the next run can
-# find one that outlived its Python driver.
-JVM_MARK = f"-Djava.io.tmpdir={WORK}/jvm_tmp"
-_GC_OPTS = "-XX:+UseG1GC -XX:G1HeapRegionSize=32m -XX:+ParallelRefProcEnabled"
+# Environment marker of a run started from this checkout. The JVM and the
+# Python workers inherit it, so the next run can find, in
+# /proc/<pid>/environ, a JVM that outlived its Python driver.
+RUN_MARK = f"PERFBENCH_WORK={WORK}".encode()
+# Spark local-dir entries the sessions of this run created; the next run
+# removes any that a killed JVM left behind.
+LOCAL_LEFTOVERS = os.path.join(WORK, "local_dir_entries")
 
 
 def log(msg: str) -> None:
@@ -87,13 +91,64 @@ def _cpu_ticks(pid: int) -> int:
     return sum(int(x) for x in fields[11:15])
 
 
-def tree_cpu_s() -> float:
-    """CPU seconds used so far by this process and all its descendants
-    (Python driver, JVM threads, Python workers). Time the hypervisor
-    gives to other guests (steal) is not in it."""
-    me = os.getpid()
-    ticks = _cpu_ticks(me) + sum(_cpu_ticks(p) for p in descendants(me))
-    return ticks / os.sysconf("SC_CLK_TCK")
+# comm of the JVM's JIT compiler threads, as /proc truncates it (15 bytes)
+_JIT_THREADS = ("C1 CompilerThre", "C2 CompilerThre")
+
+
+def _jit_ticks(pids: list[int]) -> dict[tuple[int, int], int]:
+    """utime + stime of every JIT compiler thread of the given processes."""
+    out = {}
+    for pid in pids:
+        try:
+            tids = os.listdir(f"/proc/{pid}/task")
+        except OSError:
+            continue
+        for tid in tids:
+            try:
+                with open(f"/proc/{pid}/task/{tid}/stat") as f:
+                    stat = f.read()
+            except OSError:
+                continue
+            comm, rest = stat[stat.index("(") + 1:].rsplit(")", 1)
+            if comm.startswith(_JIT_THREADS):
+                fields = rest.split()
+                out[(pid, int(tid))] = int(fields[11]) + int(fields[12])
+    return out
+
+
+def cpu_mark() -> tuple[int, dict[tuple[int, int], int]]:
+    """A snapshot for ``cpu_since``."""
+    pids = [os.getpid()] + descendants(os.getpid())
+    return sum(_cpu_ticks(p) for p in pids), _jit_ticks(pids)
+
+
+def cpu_since(mark: tuple[int, dict[tuple[int, int], int]]) -> float:
+    """CPU seconds used since ``mark`` by this process and all its
+    descendants (Python driver, JVM threads, Python workers), less the
+    JVM's JIT compiler threads. The compilers run in the background for
+    minutes after the JVM starts, and their CPU lands on whichever
+    operation is running, not on the code that made them compile. Time
+    the hypervisor gives to other guests (steal) is in neither."""
+    total0, jit0 = mark
+    total1, jit1 = cpu_mark()
+    jit = sum(t - jit0.get(k, 0) for k, t in jit1.items())
+    return (total1 - total0 - jit) / os.sysconf("SC_CLK_TCK")
+
+
+def jit_cpu_s() -> float:
+    """CPU seconds the JIT compiler threads have used so far."""
+    return sum(cpu_mark()[1].values()) / os.sysconf("SC_CLK_TCK")
+
+
+def start_clock() -> tuple[float, tuple]:
+    """Wall and CPU marks for timing one operation."""
+    return time.perf_counter(), cpu_mark()
+
+
+def stop_clock(clock: tuple[float, tuple]) -> tuple[float, float]:
+    """(wall seconds, CPU seconds) since ``start_clock``."""
+    t, cpu = clock
+    return time.perf_counter() - t, cpu_since(cpu)
 
 
 def _rss_bytes(pid: int) -> int:
@@ -104,50 +159,29 @@ def _rss_bytes(pid: int) -> int:
         return 0
 
 
-class RssSampler:
-    """Samples the summed RSS of this process and all its descendants
-    (Python driver, JVM, Python workers) on a background thread."""
-
-    def __init__(self, interval_s: float = 0.25):
-        self.interval_s = interval_s
-        self.peak = 0
-        self._stop = threading.Event()
-        self._thread = threading.Thread(target=self._loop, daemon=True)
-
-    def _loop(self) -> None:
-        me = os.getpid()
-        while not self._stop.is_set():
-            total = _rss_bytes(me) + sum(_rss_bytes(p) for p in descendants(me))
-            self.peak = max(self.peak, total)
-            self._stop.wait(self.interval_s)
-
-    def __enter__(self) -> "RssSampler":
-        self._thread.start()
-        return self
-
-    def __exit__(self, *exc) -> None:
-        self._stop.set()
-        self._thread.join(timeout=5)
-
-    @property
-    def peak_mb(self) -> float:
-        return self.peak / 2**20
+def tree_rss_mb() -> float:
+    """Summed RSS of this process and all its descendants (Python driver,
+    JVM, Python workers). Sampled between operations, never during one."""
+    me = os.getpid()
+    return (_rss_bytes(me) + sum(_rss_bytes(p) for p in descendants(me))) / 2**20
 
 
 # -- preflight ---------------------------------------------------------------
 
 
 def _stale_jvms() -> list[int]:
+    """Processes, other than this one, that inherited the run marker of
+    this checkout: the JVM or Python workers of an earlier run."""
     out = []
     for d in os.listdir("/proc"):
         if not d.isdigit() or int(d) == os.getpid():
             continue
         try:
-            with open(f"/proc/{d}/cmdline", "rb") as f:
-                cmd = f.read().decode(errors="replace")
+            with open(f"/proc/{d}/environ", "rb") as f:
+                env = f.read().split(b"\0")
         except OSError:
             continue
-        if JVM_MARK in cmd:
+        if RUN_MARK in env:
             out.append(int(d))
     return out
 
@@ -176,8 +210,8 @@ def _warm_page_cache() -> None:
 
 def preflight() -> None:
     """Bring the host to the same state before every run: no JVM of an
-    earlier run alive, no leftovers of its warehouse or Spark local dir,
-    and the code the run loads already in the page cache."""
+    earlier run alive, none of its Spark local-dir entries or work dir
+    left, and the code the run loads already in the page cache."""
     deadline = time.monotonic() + 30
     while _stale_jvms() and time.monotonic() < deadline:
         time.sleep(0.5)
@@ -186,21 +220,31 @@ def preflight() -> None:
             os.kill(pid, signal.SIGKILL)
         except ProcessLookupError:
             pass
+    if os.path.isfile(LOCAL_LEFTOVERS):
+        with open(LOCAL_LEFTOVERS) as f:
+            for path in f.read().split():
+                shutil.rmtree(path, ignore_errors=True)
     shutil.rmtree(WORK, ignore_errors=True)
-    for sub in ("jvm_tmp", "py_tmp", "spark_local", "events"):
+    for sub in ("jvm_tmp", "py_tmp", "events"):
         os.makedirs(os.path.join(WORK, sub), exist_ok=True)
     _warm_page_cache()
 
 
 def configure_env() -> None:
     """Environment for the driver, the JVM and the Python workers: the
-    checkout on the workers' path, every temp and spill dir inside it."""
+    checkout on the workers' path, the run marker, and the JVM's and
+    Python's temp dirs inside the checkout. Spark's local dir and the
+    JVM's GC options stay at the program's defaults (``session.get_spark``)."""
     os.environ["PYTHONPATH"] = ROOT + os.pathsep + os.environ.get("PYTHONPATH", "")
     os.environ["SPARK_GRAFT_CPUS"] = str(CORES)
-    os.environ["SPARK_GRAFT_LOCAL_DIR"] = os.path.join(WORK, "spark_local")
-    os.environ["SPARK_GRAFT_GC_OPTS"] = f"{_GC_OPTS} {JVM_MARK}"
+    key, value = RUN_MARK.decode().split("=", 1)
+    os.environ[key] = value
+    # read by every JVM at launch, next to (not instead of) the program's
+    # spark.driver.extraJavaOptions
+    os.environ["JAVA_TOOL_OPTIONS"] = f"-Djava.io.tmpdir={WORK}/jvm_tmp"
     os.environ["TMPDIR"] = os.path.join(WORK, "py_tmp")
-    os.environ.pop("WEAVER_TIMING", None)
+    for var in ("WEAVER_TIMING", "SPARK_GRAFT_LOCAL_DIR", "SPARK_GRAFT_GC_OPTS"):
+        os.environ.pop(var, None)
     import tempfile
 
     tempfile.tempdir = None  # re-read TMPDIR
@@ -218,17 +262,26 @@ def event_log_conf() -> dict[str, str]:
     }
 
 
-def start_session(extra_conf: dict[str, str] | None = None):
-    """Stop the active session, if any, and build a fresh one through the
-    program's own factory. The first call launches the JVM; later calls
-    start a new SparkContext in the same JVM."""
+def stop_session() -> None:
     from pyspark.sql import SparkSession
-
-    from weaver_spark.session import get_spark
 
     active = SparkSession.getActiveSession()
     if active is not None:
         active.stop()
+
+
+def start_session(extra_conf: dict[str, str] | None = None):
+    """Build a session through the program's own factory (stop the active
+    one first). The first call launches the JVM; later calls start a new
+    SparkContext in the same JVM. The local-dir entries the new context
+    creates (its block-manager dirs and its files root) are recorded, so
+    that the next run can remove them should this run's JVM be killed
+    before it cleans up."""
+    from pyspark import SparkFiles
+
+    from weaver_spark.session import get_spark
+
+    stop_session()
     spark = get_spark(
         app_name="perfbench",
         master=f"local[{CORES}]",
@@ -236,18 +289,28 @@ def start_session(extra_conf: dict[str, str] | None = None):
         extra_conf={"spark.ui.showConsoleProgress": "false", **(extra_conf or {})},
     )
     spark.sparkContext.setLogLevel("ERROR")
+    block_dirs = spark.sparkContext._jsc.sc().env().blockManager().diskBlockManager().localDirs()
+    created = [d.getAbsolutePath() for d in block_dirs]
+    created.append(os.path.dirname(SparkFiles.getRootDirectory()))
+    with open(LOCAL_LEFTOVERS, "a") as f:
+        f.writelines(p + "\n" for p in created)
     return spark
+
+
+def collect_garbage() -> None:
+    """A full collection of the JVM's heap (``System.gc()``), if a JVM runs."""
+    from pyspark import SparkContext
+
+    if SparkContext._jvm is not None:
+        SparkContext._jvm.System.gc()
 
 
 def shutdown_jvm(timeout_s: float = 60) -> None:
     """Stop Spark, close the py4j gateway and wait until the JVM and
     every other process this run started has exited."""
     from pyspark import SparkContext
-    from pyspark.sql import SparkSession
 
-    active = SparkSession.getActiveSession()
-    if active is not None:
-        active.stop()
+    stop_session()
     gw = SparkContext._gateway
     proc = getattr(gw, "proc", None) if gw is not None else None
     if gw is not None:

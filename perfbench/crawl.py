@@ -2,8 +2,8 @@
 
 Shape: ``make_deep_web_df`` with a 4-level root tree, scale mode,
 ``priority_mode="depth"``, disallow-only robots rules on two hosts, a host
-budget that caps every round after the first two, and frontier compaction
-every second round. Rounds are small (a few hundred URLs), so the
+budget that caps every round after the first, and frontier compaction
+every round. Rounds are small (a few hundred URLs), so the
 per-round fixed Spark jobs set the wall: scheduling, ``dense_seq_numeric``,
 the frontier/metrics/lineage commits and compaction.
 
@@ -30,7 +30,7 @@ TINY_ENGINE = dict(host_budget=2, compact_every=1)
 DISALLOW_HOSTS = (1, 3)
 WARM_ROUNDS = 1
 ROUND_NOMINAL_S = 10.0  # one budget-capped round on a 4-vCPU Xeon VM
-READ_REPS = 5
+READ_REPS = 6
 SAMPLE_PAYLOADS = 8
 
 
@@ -77,8 +77,10 @@ def simulate(shape: dict, engine_kw: dict, seed: int):
 
 
 class CrawlSetup:
-    """One set-up: session, inputs (web DataFrame, mirror web, simulator
-    result) and an engine with robots rules and the web registered."""
+    """One set-up: session, the web DataFrame, and an engine with robots
+    rules and the web registered. The simulator's expected crawl is the
+    benchmark's oracle, not the program's work: ``simulate`` runs once per
+    run, outside the set-ups."""
 
     def __init__(self, seed: int, shape: dict, engine_kw: dict, name: str,
                  extra_conf: dict | None = None):
@@ -90,7 +92,6 @@ class CrawlSetup:
         self.session_s = time.perf_counter() - t0
         t1 = time.perf_counter()
         self.seeds, web_df = make_deep_web_df(self.spark, **shape)
-        self.mirror, self.sim = simulate(shape, engine_kw, seed)
         self.warehouse = os.path.join(common.WORK, "warehouse", name)
         self.engine = CrawlEngine(
             self.spark, self.warehouse, mode="scale", priority_mode="depth",
@@ -120,7 +121,7 @@ def crawl(setup: CrawlSetup, n_timed: int, ops: OpLog, group=None) -> dict:
            "warm_walls": [], "rounds_run": 0}
     for n in range(WARM_ROUNDS + n_timed):
         warm = n < WARM_ROUNDS
-        t, cpu = time.perf_counter(), common.tree_cpu_s()
+        clock = common.start_clock()
         try:
             with group(f"warm:{n}" if warm else f"round:{n}"):
                 st = eng.run_round()
@@ -128,7 +129,7 @@ def crawl(setup: CrawlSetup, n_timed: int, ops: OpLog, group=None) -> dict:
             log(f"round {n} raised {type(e).__name__}: {e}")
             ops.record(False, f"round {n} raised")
             break
-        wall, cpu = time.perf_counter() - t, common.tree_cpu_s() - cpu
+        wall, cpu = common.stop_clock(clock)
         if st is None:
             break
         out["rounds_run"] += 1
@@ -141,15 +142,17 @@ def crawl(setup: CrawlSetup, n_timed: int, ops: OpLog, group=None) -> dict:
     return out
 
 
-def check(setup: CrawlSetup, rounds_run: int, ops: OpLog, corrupt: str | None = None) -> None:
-    """Compare the crawl's first ``rounds_run`` rounds with the simulator:
+def check(setup: CrawlSetup, oracle: tuple, rounds_run: int, ops: OpLog,
+          corrupt: str | None = None) -> None:
+    """Compare the crawl's first ``rounds_run`` rounds with the simulator's
+    (``oracle``, from ``simulate``):
     per-round crawl order, the stored key set, and sampled payloads
     against ``webgen.gen_payload``. One verdict per round."""
     from pyspark.sql import functions as F
 
     from weaver_spark.webgen import gen_payload
 
-    eng, sim, web = setup.engine, setup.sim, setup.mirror
+    eng, (web, sim) = setup.engine, oracle
     got_rounds: dict[int, list[str]] = {}
     for r in eng.crawl_order().collect():
         got_rounds.setdefault(r["round"], []).append(r["url"])
@@ -187,7 +190,7 @@ def reads(eng, ops: OpLog, reps: int, group=None) -> list[dict[str, dict[str, fl
     for _ in range(reps):
         walls, cpus = {}, {}
         for name in ("gather", "crawl_order", "enqueue_log"):
-            t, cpu = time.perf_counter(), common.tree_cpu_s()
+            clock = common.start_clock()
             try:
                 with group(name):
                     getattr(eng, name)().write.format("noop").mode("overwrite").save()
@@ -195,8 +198,7 @@ def reads(eng, ops: OpLog, reps: int, group=None) -> list[dict[str, dict[str, fl
             except Exception as e:  # noqa: BLE001 - a failed op is counted, not fatal
                 log(f"{name} raised {type(e).__name__}: {e}")
                 ok = False
-            walls[name] = time.perf_counter() - t
-            cpus[name] = common.tree_cpu_s() - cpu
+            walls[name], cpus[name] = common.stop_clock(clock)
             ops.record(ok, f"{name} raised")
         out.append({"wall": walls, "cpu": cpus})
     return out

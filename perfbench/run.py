@@ -24,18 +24,18 @@ from perfbench import common  # noqa: E402
 from perfbench.common import OpLog, geomean, log, median  # noqa: E402
 
 WORKLOADS = ("crawl_deep", "analytics")
-SETUP_REPS = 3
+# set-ups timed after the untimed first one (which launches the JVM)
+SETUP_REPS = {"crawl_deep": 3, "analytics": 4}
 E2E_UNITS = {
     "setup_s": "s",
     "op_cpu_s": "s",
-    "read_cpu_s": "s",
+    "op_wall_s": "s",
+    "read_s": "s",
 }
-# wall-clock figures of the untraced phase; reported by traced runs only
+# figures of the untraced phase that are not gated; traced runs print them
 WALL_UNITS = {
     "wall.setup_s": "s",
     "wall.throughput_per_s": "1/s",
-    "wall.op_geomean_s": "s",
-    "wall.read_s": "s",
 }
 
 
@@ -147,16 +147,22 @@ def _sum_of_best(reps: list[dict[str, dict[str, float]]], kind: str) -> float:
     return sum(min(r[kind][name] for r in reps) for name in reps[0][kind])
 
 
-def _set_up(make) -> tuple[list, list[float], list[float]]:
-    """Run ``SETUP_REPS`` set-ups; returns them with the wall and the
-    process-tree CPU seconds each took."""
-    setups, walls, cpus = [], [], []
-    for i in range(SETUP_REPS):
-        t, cpu = time.perf_counter(), common.tree_cpu_s()
+def _set_up(make, reps: int) -> tuple[list, list[float], list[float], list[float]]:
+    """Run ``reps`` set-ups; returns them with the wall, the CPU seconds
+    (``common.cpu_since``) each took, and the tree's RSS after each. Before
+    the clock starts, the previous session is stopped and the JVM's heap
+    collected, so no set-up pays for garbage an earlier operation left."""
+    setups, walls, cpus, rss = [], [], [], []
+    for i in range(reps):
+        common.stop_session()
+        common.collect_garbage()
+        clock = common.start_clock()
         setups.append(make(i))
-        walls.append(time.perf_counter() - t)
-        cpus.append(common.tree_cpu_s() - cpu)
-    return setups, walls, cpus
+        wall, cpu = common.stop_clock(clock)
+        walls.append(wall)
+        cpus.append(cpu)
+        rss.append(common.tree_rss_mb())
+    return setups, walls, cpus, rss
 
 
 # -- crawl_deep ----------------------------------------------------------------
@@ -167,34 +173,45 @@ def run_crawl(args, ops: OpLog, shape=None, engine_kw=None) -> tuple[dict, dict]
 
     shape = shape or crawl.FULL
     engine_kw = engine_kw or crawl.FULL_ENGINE
-    setups, setup_walls, setup_cpus = _set_up(
-        lambda i: crawl.CrawlSetup(args.seed, shape, engine_kw, f"setup{i}"))
-    st = setups[-1]
+    t = time.perf_counter()
+    oracle = crawl.simulate(shape, engine_kw, args.seed)
+    oracle_s = time.perf_counter() - t
+    t = time.perf_counter()
+    st = crawl.CrawlSetup(args.seed, shape, engine_kw, "crawl")
+    cold_s = time.perf_counter() - t
     c = crawl.crawl(st, crawl.timed_rounds(args.seconds), ops)
-    crawl.check(st, c["rounds_run"], ops, args.corrupt)
+    rss = [common.tree_rss_mb()]
+    crawl.check(st, oracle, c["rounds_run"], ops, args.corrupt)
     rd = crawl.reads(st.engine, ops, crawl.READ_REPS)
     if not c["walls"]:
         raise RuntimeError("no timed round completed")
+    setups, setup_walls, setup_cpus, setup_rss = _set_up(
+        lambda i: crawl.CrawlSetup(args.seed, shape, engine_kw, f"setup{i}"),
+        SETUP_REPS["crawl_deep"])
+    rss += setup_rss
     e2e = {
         "setup_s": median(setup_cpus),
         "op_cpu_s": geomean(c["cpus"]),
-        "read_cpu_s": _sum_of_best(rd, "cpu"),
+        "op_wall_s": geomean(c["walls"]),
+        "read_s": _sum_of_best(rd, "wall"),
     }
     wall = {
         "wall.setup_s": median(setup_walls),
         "wall.throughput_per_s": sum(c["fetched"]) / sum(c["walls"]),
-        "wall.op_geomean_s": geomean(c["walls"]),
-        "wall.read_s": _sum_of_best(rd, "wall"),
     }
     diag = {
         **wall,
+        "oracle_s": oracle_s,
+        "cold_setup_s": cold_s,
         "setup_walls": setup_walls,
         "setup_cpus": setup_cpus,
         "session_walls": [s.session_s for s in setups],
         "round_walls": c["walls"],
         "round_cpus": c["cpus"],
         "warm_walls": c["warm_walls"],
-        "timed_rounds": len(c["walls"]),
+        "read_cpu_s": _sum_of_best(rd, "cpu"),
+        "rss_mb_max": max(rss),
+        "jit_cpu_s": common.jit_cpu_s(),
     }
     if not args.trace:
         return e2e, {"diag": diag}
@@ -307,46 +324,63 @@ def crawl_layers(traced: dict, groups: dict) -> dict[str, float]:
 
 
 def run_analytics(args, ops: OpLog, scale: float = 1.0) -> tuple[dict, dict]:
-    from perfbench import analytics
+    from perfbench import analytics, tablegen
 
-    setups, setup_walls, setup_cpus = _set_up(
-        lambda i: analytics.AnalyticsSetup(args.seed, scale))
-    st = setups[-1]
-    analytics.check(st, analytics.TIMED, ops, args.corrupt)
+    data_dir = os.path.join(common.WORK, "tables")
+    t = time.perf_counter()
+    tablegen.write_tables(data_dir, args.seed, scale)
+    tables_s = time.perf_counter() - t
+    t = time.perf_counter()
+    st = analytics.AnalyticsSetup(data_dir)
+    cold_s = time.perf_counter() - t
+    t = time.perf_counter()
+    analytics.check(st, analytics.TIMED + [analytics.READ_QUERY], ops, args.corrupt)
+    check_s = time.perf_counter() - t
     walls, cpus = analytics.timed_passes(
         st, analytics.TIMED, analytics.timed_pass_count(args.seconds), ops)
-    rd = analytics.read_tables(st, ops, analytics.READ_REPS)
-    all_walls = [w for ws in walls.values() for w in ws]
-    if not all_walls:
-        raise RuntimeError("no timed query completed")
+    rd_walls, rd_cpus = analytics.timed_passes(
+        st, [analytics.READ_QUERY], analytics.READ_REPS, ops)
+    rss = [common.tree_rss_mb()]
+    setups, setup_walls, setup_cpus, setup_rss = _set_up(
+        lambda i: analytics.AnalyticsSetup(data_dir), SETUP_REPS["analytics"])
+    rss += setup_rss
     # each query's least disturbed pass: other tenants only add cost
     per_query = {n: min(ws) for n, ws in walls.items() if ws}
     per_query_cpu = {n: min(cs) for n, cs in cpus.items() if cs}
+    if len(per_query) < len(analytics.TIMED) or not rd_walls[analytics.READ_QUERY]:
+        raise RuntimeError("a timed query never completed")
     e2e = {
         "setup_s": median(setup_cpus),
         "op_cpu_s": geomean(list(per_query_cpu.values())),
-        "read_cpu_s": _sum_of_best(rd, "cpu"),
+        "op_wall_s": geomean(list(per_query.values())),
+        "read_s": min(rd_walls[analytics.READ_QUERY]),
     }
     wall = {
         "wall.setup_s": median(setup_walls),
         "wall.throughput_per_s": len(per_query) / sum(per_query.values()),
-        "wall.op_geomean_s": geomean(list(per_query.values())),
-        "wall.read_s": _sum_of_best(rd, "wall"),
     }
     diag = {
         **wall,
+        "tables_s": tables_s,
+        "check_s": check_s,
+        "cold_setup_s": cold_s,
         "setup_walls": setup_walls,
         "setup_cpus": setup_cpus,
         "session_walls": [s.session_s for s in setups],
-        "timed_queries": len(all_walls),
         "per_query_s": per_query,
         "per_query_cpu_s": per_query_cpu,
+        "pass_cpus": cpus,
+        "pass_walls": walls,
+        "read_walls": rd_walls[analytics.READ_QUERY],
+        "read_cpu_s": min(rd_cpus[analytics.READ_QUERY]),
+        "rss_mb_max": max(rss),
+        "jit_cpu_s": common.jit_cpu_s(),
     }
     if not args.trace:
         return e2e, {"diag": diag}
     from perfbench.trace import Tracer
 
-    ts = analytics.AnalyticsSetup(args.seed, scale, common.event_log_conf())
+    ts = analytics.AnalyticsSetup(data_dir, common.event_log_conf())
     tracer = Tracer(ts.spark)
     traced_walls, _ = analytics.timed_passes(ts, _registry_names(), 1, ops, group=tracer.group)
     traced = {
@@ -403,16 +437,12 @@ def execute(args) -> dict:
     steal0 = common.steal_seconds()
     t0 = time.perf_counter()
     try:
-        with common.RssSampler() as rss:
-            try:
-                runner = run_crawl if args.workload == "crawl_deep" else run_analytics
-                e2e, extra = runner(args, ops, **args.shape_kw)
-            finally:
-                common.shutdown_jvm()
+        runner = run_crawl if args.workload == "crawl_deep" else run_analytics
+        e2e, extra = runner(args, ops, **args.shape_kw)
     finally:
+        common.shutdown_jvm()
         diag = {"wall_s": time.perf_counter() - t0,
                 "steal_s": common.steal_seconds() - steal0}
-    diag["peak_rss_mb"] = rss.peak_mb
     diag.update(extra["diag"])
     log("diag " + json.dumps(diag))
     if ops.problems:
