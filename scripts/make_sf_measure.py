@@ -64,10 +64,7 @@ def _domain_offsets() -> dict[str, int]:
     }
 
 
-DOMS = _domain_offsets()
-
-
-def tile(name: str, shift_cols: dict[str, str]) -> None:
+def tile(name: str, shift_cols: dict[str, str], doms: dict[str, int]) -> None:
     """Union COPIES copies of the sf0.1 table, shifting each key column
     by copy * domain_offset so copies never collide on keys while
     cross-table joins stay aligned."""
@@ -77,7 +74,7 @@ def tile(name: str, shift_cols: dict[str, str]) -> None:
     for k in range(COPIES):
         c = df.copy()
         for col, dom in shift_cols.items():
-            c[col] = c[col] + k * DOMS[dom]
+            c[col] = c[col] + k * doms[dom]
         parts.append(c)
     import pandas as pd
 
@@ -154,15 +151,17 @@ def gen_embeddings() -> None:
 
 
 def main() -> None:
+    doms = _domain_offsets()
     tile(
         "lineitem",
         {"l_orderkey": "orderkey", "l_partkey": "partkey", "l_suppkey": "suppkey"},
+        doms,
     )
-    tile("orders", {"o_orderkey": "orderkey", "o_custkey": "custkey"})
-    tile("customer", {"c_custkey": "custkey"})
-    tile("part", {"p_partkey": "partkey"})
-    tile("supplier", {"s_suppkey": "suppkey"})
-    tile("events", {"event_id": "event_id", "user_id": "user_id"})
+    tile("orders", {"o_orderkey": "orderkey", "o_custkey": "custkey"}, doms)
+    tile("customer", {"c_custkey": "custkey"}, doms)
+    tile("part", {"p_partkey": "partkey"}, doms)
+    tile("supplier", {"s_suppkey": "suppkey"}, doms)
+    tile("events", {"event_id": "event_id", "user_id": "user_id"}, doms)
     copy_table("nation")
     copy_table("region")
     gen_documents()

@@ -92,13 +92,13 @@ def test_bloom_no_false_negatives_and_low_fp(spark):
 
 
 def test_engine_bloom_mode_same_results(spark, web, tmp_path_factory):
-    """use_bloom only reroutes rows around the exact join — stored table
-    must be identical."""
+    """The bloom seen filter only reroutes rows around the exact join —
+    stored table must be identical."""
     wh1 = str(tmp_path_factory.mktemp("wh_nb"))
     wh2 = str(tmp_path_factory.mktemp("wh_bl"))
     outs = []
-    for wh, flag in ((wh1, False), (wh2, True)):
-        eng = CrawlEngine(spark, wh, mode="reproduction", use_bloom=flag)
+    for wh, filt in ((wh1, "exact"), (wh2, "bloom")):
+        eng = CrawlEngine(spark, wh, mode="reproduction", seen_filter=filt)
         eng.set_web(web)
         eng.seed_urls(web.seeds)
         eng.run(max_rounds=20)

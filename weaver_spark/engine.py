@@ -108,6 +108,18 @@ def _priority_expr(kind_col, depth_col=None, mode: str = "kind"):
     return F.when(kind_col == URL_TYPE_ROOT, F.lit(1)).otherwise(F.lit(0))
 
 
+def _seq_bounds(grp_rows) -> tuple[int, int] | None:
+    """(min, max) enqueue_seq over the round's rollup rows, or None —
+    dense_seq_numeric then computes its own bounds — when there are no
+    rows or any group's bound is null (min()/max() over a None would
+    raise TypeError mid-round)."""
+    lo = [r["mn_seq"] for r in grp_rows]
+    hi = [r["mx_seq"] for r in grp_rows]
+    if not lo or None in lo or None in hi:
+        return None
+    return min(lo), max(hi)
+
+
 class CrawlEngine:
     def __init__(
         self,
@@ -117,7 +129,6 @@ class CrawlEngine:
         k_cap: int | None = None,
         host_budget: int | None = None,
         salt_buckets: int = 16,
-        use_bloom: bool = False,
         seen_filter: str | None = None,
         track_leases: bool = False,
         lease_timeout_s: int = 30,
@@ -162,12 +173,11 @@ class CrawlEngine:
         self.k_cap = k_cap
         self.host_budget = host_budget
         self.salt_buckets = salt_buckets
-        self.use_bloom = use_bloom
-        # seen_filter supersedes use_bloom: exact | bloom | cuckoo (the
-        # north rule's bloom -> partitioned-cuckoo upgrade path; cuckoo
-        # supports deletion — operators/cuckoo.py)
+        # seen_filter: exact | bloom | cuckoo (the north rule's bloom ->
+        # partitioned-cuckoo upgrade path; cuckoo supports deletion —
+        # operators/cuckoo.py)
         if seen_filter is None:
-            seen_filter = "bloom" if use_bloom else "exact"
+            seen_filter = "exact"
         assert seen_filter in ("exact", "bloom", "cuckoo")
         self.seen_filter = seen_filter
         # persistent cross-round seen filters: built once, maintained by
@@ -1412,11 +1422,7 @@ class CrawlEngine:
             for k in ("fetched", "failed", "n_links", "revalidated")
         }
         agg["payload_rows"] = sum(r["payloads"] for r in grp_rows)
-        seq_bounds = (
-            (min(r["mn_seq"] for r in grp_rows), max(r["mx_seq"] for r in grp_rows))
-            if grp_rows
-            else None
-        )
+        seq_bounds = _seq_bounds(grp_rows)
         mark("stats_agg")
         # idempotent on re-run after rollback/crash: a metrics commit for
         # this round that already exists is reused, not duplicated

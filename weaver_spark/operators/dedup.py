@@ -27,24 +27,29 @@ band width (minhash), hamming radius (simhash), or a candidate prefilter
 shingles present in more than a fraction of docs, the standard trick to
 keep candidate generation near-linear).
 
-Bucket-size cap: a banded self-join emits O(|bucket|^2) pairs per
-(band, bkey) bucket, and on a boilerplate-heavy web corpus (templated
-pages, near-identical signatures) a single band key can hold 1e5-1e7
-docs — AQE skew-join splits the *input* partition but cannot shrink a
-quadratic *output*. Every banded operator here therefore takes
-``max_bucket`` (default 500): buckets larger than that are DROPPED
-deterministically before the join. This is safe by design — an
-over-cap bucket means (nearly) identical signatures, which is
-exact-dup-shaped content that ``dedup_exact`` is the intended
-pre-collapse companion for; run it first so near-identical mass never
-reaches the LSH stage. Use ``overcap_buckets`` to observe what a cap
-would drop (count + coverage) — bench's dedup_scale leg logs bucket
-p100 and the dropped-bucket count per run.
+Posting-list cap: every pair generator here (the three banded
+operators, n-gram Jaccard, and the registry's minhash/jaccard queries)
+runs through ONE primitive, ``capped_postings``: group rows by a key
+(a (band, bkey) bucket, a shingle), collect the key's sorted member
+list, drop the list whole when it holds more than ``max_size`` members,
+and let ``suffix_pairs`` emit each surviving list's n(n-1)/2 pairs. A
+key of 1e5-1e7 members (templated pages, near-identical signatures,
+stopword shingles) would emit O(|key|^2) pairs, and AQE's skew split
+cannot shrink a quadratic output; it would also have to be collected
+into one list first. The cap therefore acts before the list is built:
+a ``row_number`` over the key keeps at most ``max_size + 1`` rows, so
+no aggregate ever holds more than that many members of one key. The
+drop is safe by design: an over-cap bucket means (nearly) identical
+signatures, which is exact-dup-shaped content that ``dedup_exact`` is
+the intended pre-collapse companion for; run it first so near-identical
+mass never reaches the LSH stage. Use ``overcap_buckets`` to observe
+what a cap would drop (count + coverage) — bench's dedup_scale leg
+logs bucket p100 and the dropped-bucket count per run.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.text import fingerprint_col, ngrams_col, tokens_col
@@ -58,49 +63,76 @@ def dedup_exact(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     return w.join(keep, [id_col, "_fp"], "left_semi").drop("_fp")
 
 
-def _cap_buckets(buckets: DataFrame, max_bucket: int | None) -> DataFrame:
-    """Drop (band, bkey) buckets with more than ``max_bucket`` members.
-
-    Deterministic whole-bucket drop (never a sample): the pair output
-    stays reproducible and the semantics are crisp — "signatures this
-    common carry no near-dup evidence beyond exact-dup, which
-    ``dedup_exact`` already handles". r7 plan shape: the OVER-cap key
-    set is computed with one keyed count (map-side partial agg — the
-    exchange carries (band, bkey, partial count) triples, not rows)
-    and anti-joined back as a BROADCAST — over-cap buckets are rare by
-    construction (at most n/max_bucket keys exist, and only
-    boilerplate-shaped ones are over the cap), so the big bucket
-    relation is filtered map-side without the extra keyed semi-join
-    exchange the previous shape paid (guide §3.1)."""
-    if max_bucket is None:
-        return buckets
-    over = overcap_buckets(buckets, max_bucket).select("band", "bkey")
-    return buckets.join(F.broadcast(over), ["band", "bkey"], "left_anti")
-
-
-def _bucket_pairs(
-    buckets: DataFrame, id_col: str, extra_cols: list[str]
+def capped_postings(
+    rel: DataFrame, keys: list[str], id_col: str, max_size: int | None
 ) -> DataFrame:
-    """Grouped in-place pair generation for banded LSH (r7 shape shared
-    by minhash/simhash/phash): ONE groupBy(band, bkey) collects each
-    bucket's members as a sorted list (callers cap bucket size FIRST
-    via ``_cap_buckets``, so the list is bounded by ``max_bucket``; an
-    uncapped caller accepts the quadratic pair output, which dominates
-    the list itself), and a bucket of n members emits exactly its
-    n(n-1)/2 ordered pairs via posexplode + suffix slice — the same
-    {(a, b) : a.id < b.id} set the old bucket self-join produced, with
-    one keyed exchange instead of the self-join's two shuffle legs
-    (guide §2.4/§3). Output: ``a``/``b`` struct columns (fields ``_id``
-    + ``extra_cols``) for the caller to verify/project."""
-    mem = F.struct(F.col(id_col).alias("_id"), *[F.col(c) for c in extra_cols])
-    grouped = (
-        buckets.groupBy("band", "bkey")
-        .agg(F.sort_array(F.collect_list(mem)).alias("mem"))
-        .where(F.size("mem") >= 2)
+    """One row per key of ``rel``: the ``keys`` columns plus ``ids``, the
+    key's ``id_col`` values as a sorted list. A key with more than
+    ``max_size`` rows is dropped whole (deterministically, never
+    sampled). The cap bounds the list before it is built: a
+    ``row_number`` over the key, ordered by ``id_col``, keeps at most
+    ``max_size + 1`` rows per key — the one extra row is what tells an
+    over-cap key from one exactly at the cap — so ``collect_list``
+    never holds more than that. The window and the grouping share the
+    key's hash partitioning: one keyed exchange, and while ``max_size +
+    1`` is within ``spark.sql.optimizer.windowGroupLimitThreshold``
+    Spark also trims each map task's rows per key before the exchange.
+    ``max_size=None`` collects every key uncapped."""
+    if max_size is not None:
+        w = Window.partitionBy(*keys).orderBy(id_col)
+        rel = rel.withColumn("_rn", F.row_number().over(w)).where(
+            F.col("_rn") <= max_size + 1
+        )
+    postings = rel.groupBy(*keys).agg(F.sort_array(F.collect_list(id_col)).alias("ids"))
+    if max_size is not None:
+        postings = postings.where(F.size("ids") <= max_size)
+    return postings
+
+
+def suffix_pairs(postings: DataFrame, a: str, b: str) -> DataFrame:
+    """Columns ``a``, ``b``: every pair (ids[i], ids[j]), i < j, of each
+    ``ids`` list from ``capped_postings``. The lists are sorted, so a
+    key of n members emits exactly its n(n-1)/2 pairs {(x, y) : x < y}
+    via posexplode + suffix slice, in place: no self-join. A member
+    seen under several keys yields its pair once per key; callers
+    ``distinct`` or count them."""
+    return (
+        postings.where(F.size("ids") >= 2)
+        .select(F.posexplode("ids").alias("_i", a), "ids")
+        .select(a, F.explode(F.slice("ids", F.col("_i") + 2, F.size("ids"))).alias(b))
     )
-    return grouped.select(F.posexplode("mem").alias("_i", "a"), "mem").select(
-        "a",
-        F.explode(F.slice("mem", F.col("_i") + 2, F.size("mem"))).alias("b"),
+
+
+def jaccard_counts(
+    toks: DataFrame, id_col: str, tok_col: str, max_size: int | None, a: str, b: str
+) -> DataFrame:
+    """(``a``, ``b``, ``jaccard``) for every pair of ids sharing a kept
+    token, ``jaccard`` unrounded. ``toks`` holds distinct (id, token)
+    rows; tokens in more than ``max_size`` ids are dropped before any
+    pair exists. Sizes (re-explode the kept lists, singletons included)
+    and intersections (suffix pairs counted per pair) both derive from
+    the one ``capped_postings`` exchange. Callers apply their own
+    threshold, rounding and names."""
+    postings = capped_postings(toks, [tok_col], id_col, max_size)
+    sizes = (
+        postings.select(F.explode("ids").alias(id_col))
+        .groupBy(id_col)
+        .agg(F.count("*").alias("sz"))
+    )
+    inter = suffix_pairs(postings, a, b).groupBy(a, b).agg(F.count("*").alias("inter"))
+    sa = sizes.select(F.col(id_col).alias(a), F.col("sz").alias("sz_a"))
+    sb = sizes.select(F.col(id_col).alias(b), F.col("sz").alias("sz_b"))
+    return (
+        inter.join(sa, a)
+        .join(sb, b)
+        .select(
+            a,
+            b,
+            (
+                F.col("inter").cast("double")
+                / (F.col("sz_a") + F.col("sz_b") - F.col("inter"))
+            ).alias("jaccard"),
+        )
     )
 
 
@@ -160,7 +192,7 @@ def dedup_minhash_lsh(
     rows_per_band = num_hashes // bands
     sigs = _minhash_sigs(df, id_col, text_col, num_hashes, shingle_n)
     # band key = hash of the band's signature slice -> explode to
-    # (band_id, band_key, id) then self-join per band bucket
+    # (band_id, band_key, id), then pairs per capped band bucket
     band_cols = [
         F.struct(
             F.lit(b).alias("band"),
@@ -173,12 +205,8 @@ def dedup_minhash_lsh(
     buckets = sigs.select(
         F.col(id_col), F.explode(F.array(*band_cols)).alias("bb")
     ).select(id_col, F.col("bb.band").alias("band"), F.col("bb.bkey").alias("bkey"))
-    buckets = _cap_buckets(buckets, max_bucket)
-    return (
-        _bucket_pairs(buckets, id_col, [])
-        .select(F.col("a._id").alias("id_a"), F.col("b._id").alias("id_b"))
-        .distinct()
-    )
+    postings = capped_postings(buckets, ["band", "bkey"], id_col, max_bucket)
+    return suffix_pairs(postings, "id_a", "id_b").distinct()
 
 
 def dedup_simhash(
@@ -200,7 +228,7 @@ def dedup_simhash(
     # shuffle per-row rewrite (array bit counts) was measured SLOWER
     # (interpreted higher-order lambdas vs codegen'd hash + sum aggs
     # here — see queries.simhash16 r7 note); the r7 win in this
-    # operator is the banded pair stage below (_bucket_pairs).
+    # operator is the banded pair stage below (suffix_pairs).
     tok = df.select(F.col(id_col), F.explode(tokens_col(F.col(text_col))).alias("t"))
     h = tok.withColumn("h", F.xxhash64("t"))
     bit_sums = [
@@ -229,12 +257,13 @@ def dedup_simhash(
         for b in range(n_bands)
     ]
     buckets = sigs.select(
-        F.col(id_col), F.col("simhash"), F.explode(F.array(*band_cols)).alias("bb")
-    ).select(id_col, "simhash", F.col("bb.band").alias("band"), F.col("bb.bkey").alias("bkey"))
-    buckets = _cap_buckets(buckets, max_bucket)
+        F.struct(F.col(id_col).alias("_id"), "simhash").alias("mem"),
+        F.explode(F.array(*band_cols)).alias("bb"),
+    ).select("mem", F.col("bb.band").alias("band"), F.col("bb.bkey").alias("bkey"))
+    postings = capped_postings(buckets, ["band", "bkey"], "mem", max_bucket)
     ham = F.bit_count(F.col("a.simhash").bitwiseXOR(F.col("b.simhash")))
     pairs = (
-        _bucket_pairs(buckets, id_col, ["simhash"])
+        suffix_pairs(postings, "a", "b")
         .where(ham <= max_hamming)
         .select(
             F.col("a._id").alias("id_a"),
@@ -261,52 +290,19 @@ def dedup_ngram_jaccard(
     shingles generate quadratic candidates without adding evidence —
     a dropped shingle only lowers measured Jaccard for pairs that were
     below threshold anyway at web scale)."""
-    # r7 plan (the registry ngram_jaccard_pairs shape): per-doc distinct
-    # shingles via array_distinct in the map pass (no .distinct()
-    # exchange), then ONE groupBy(sh) collects each shingle's sorted
-    # posting list, from which df-filtering (size(ids) <= max_df*n),
-    # per-doc sizes (re-explode) and intersection counts (suffix pair
-    # generation) all derive — the dfreq aggregate + broadcast semi-join
-    # + two-legged self-join collapse into one keyed exchange whose
-    # shuffle files both consumers reuse (ReusedExchange, guide §2.4).
+    # shape shared with the registry's ngram_jaccard_pairs: per-doc
+    # distinct shingles via array_distinct in the map pass (no .distinct()
+    # exchange), then jaccard_counts — one capped posting-list exchange
+    # feeds both per-doc sizes and intersection counts.
     sh = df.select(
         F.col(id_col),
         F.explode(F.array_distinct(ngrams_col(F.col(text_col), shingle_n))).alias(
             "sh"
         ),
     )
-    grouped = sh.groupBy("sh").agg(
-        F.sort_array(F.collect_list(id_col)).alias("ids")
-    )
-    if max_df is not None:
-        n_docs = df.count()
-        grouped = grouped.where(F.size("ids") <= int(max_df * n_docs))
-    sizes = (
-        grouped.select(F.explode("ids").alias(id_col))
-        .groupBy(id_col)
-        .agg(F.count("*").alias("sz"))
-    )
-    inter = (
-        grouped.where(F.size("ids") >= 2)
-        .select(F.posexplode("ids").alias("_i", "id_a"), "ids")
-        .select(
-            "id_a",
-            F.explode(
-                F.slice("ids", F.col("_i") + 2, F.size("ids"))
-            ).alias("id_b"),
-        )
-        .groupBy("id_a", "id_b")
-        .agg(F.count("*").alias("inter"))
-    )
-    sa = sizes.select(F.col(id_col).alias("id_a"), F.col("sz").alias("sz_a"))
-    sb = sizes.select(F.col(id_col).alias("id_b"), F.col("sz").alias("sz_b"))
+    max_size = None if max_df is None else int(max_df * df.count())
     return (
-        inter.join(sa, "id_a")
-        .join(sb, "id_b")
-        .withColumn(
-            "jaccard",
-            F.col("inter") / (F.col("sz_a") + F.col("sz_b") - F.col("inter")),
-        )
+        jaccard_counts(sh, id_col, "sh", max_size, "id_a", "id_b")
         .where(F.col("jaccard") >= threshold)
         .select("id_a", "id_b", F.round("jaccard", 6).alias("jaccard"))
     )
@@ -481,12 +477,13 @@ def dedup_phash_hamming(
         for b in range(n_bands)
     ]
     buckets = df.select(
-        F.col(id_col), F.col(phash_col), F.explode(F.array(*band_cols)).alias("bb")
-    ).select(id_col, phash_col, F.col("bb.band").alias("band"), F.col("bb.bkey").alias("bkey"))
-    buckets = _cap_buckets(buckets, max_bucket)
+        F.struct(F.col(id_col).alias("_id"), phash_col).alias("mem"),
+        F.explode(F.array(*band_cols)).alias("bb"),
+    ).select("mem", F.col("bb.band").alias("band"), F.col("bb.bkey").alias("bkey"))
+    postings = capped_postings(buckets, ["band", "bkey"], "mem", max_bucket)
     ham = F.bit_count(F.col(f"a.{phash_col}").bitwiseXOR(F.col(f"b.{phash_col}")))
     return (
-        _bucket_pairs(buckets, id_col, [phash_col])
+        suffix_pairs(postings, "a", "b")
         .where(ham <= max_hamming)
         .select(
             F.col("a._id").alias("id_a"),

@@ -16,6 +16,10 @@ Two tiers for top-k cosine neighbors:
 Hyperplanes are generated deterministically from a seed — numpy on the
 driver, shipped as literal arrays into the plan (a few KB), so the JVM
 computes all projections without Python workers.
+
+Every top-k operator returns ``cosine`` unrounded: callers round once,
+to their own precision (rounding here first and again in the caller is
+a double rounding that can move the last kept digit).
 """
 
 from __future__ import annotations
@@ -66,7 +70,7 @@ def knn_bruteforce(
     return (
         pairs.withColumn("rk", F.row_number().over(w))
         .where(F.col("rk") <= k)
-        .select("query_id", "neighbor_id", "rk", F.round("cosine", 6).alias("cosine"))
+        .select("query_id", "neighbor_id", "rk", "cosine")
     )
 
 
@@ -149,7 +153,7 @@ def knn_lsh(
     return (
         cands.withColumn("rk", F.row_number().over(w))
         .where(F.col("rk") <= k)
-        .select("query_id", "neighbor_id", "rk", F.round("cosine", 6).alias("cosine"))
+        .select("query_id", "neighbor_id", "rk", "cosine")
     )
 
 
@@ -399,7 +403,7 @@ def knn_ivf(
     return (
         cands.withColumn("rk", F.row_number().over(w))
         .where(F.col("rk") <= k)
-        .select("query_id", "neighbor_id", "rk", F.round("cosine", 6).alias("cosine"))
+        .select("query_id", "neighbor_id", "rk", "cosine")
     )
 
 

@@ -601,22 +601,20 @@ def minhash_lsh_pairs(spark: SparkSession, sf: str) -> DataFrame:
     """LSH banding: candidate pairs colliding on band (m1,m2) or (m3,m4)
     — the band->bucket-join stage of MinHash-LSH dedup, with the
     bucket-size cap every banded self-join needs at scale (buckets
-    holding > 100 docs are dropped before the join — over-cap buckets
-    are exact-dup-shaped and would emit O(|bucket|^2) pairs; same rule
-    as operators/dedup._cap_buckets, mirrored in the oracle's HAVING).
+    holding > 100 docs are dropped — over-cap buckets are
+    exact-dup-shaped and would emit O(|bucket|^2) pairs; mirrored in the
+    oracle's HAVING).
 
-    r7 plan: both bands explode from the (map-only) signature pass into
-    (band, k1, k2) rows, ONE groupBy collects each bucket's sorted doc
-    list (bounded by the cap), and pairs are generated in place with
-    posexplode + slice — a bucket of n docs emits exactly its n(n-1)/2
-    ordered pairs. This replaces, per band, a count-aggregate exchange
-    + a semi-join + a self-join (two more shuffle legs of the signature
-    relation) with a single keyed exchange shared by both bands
-    (guide §2.4/§3); the old ``persist`` crutch goes away because the
-    signature pipeline is now a map pass consumed once. The pair set is
-    unchanged: within a bucket the sorted-list suffix pairing emits
-    {(a, b) : a < b}, the same predicate the self-join applied, and
-    ``size(ids) <= 100`` is the same cap the count-filter applied."""
+    Plan: both bands explode from the (map-only) signature pass into
+    (band, k1, k2) rows, and the dedup family's one pair generator
+    (operators/dedup.capped_postings + suffix_pairs) collects each
+    bucket's sorted doc list — at most 101 rows per bucket ever reach
+    the list, so a hot bucket is dropped without being materialized —
+    and emits a bucket of n docs' n(n-1)/2 pairs {(a, b) : a < b} in
+    place: one keyed exchange shared by both bands, the same pair set
+    the oracle's self-join yields."""
+    from .operators.dedup import capped_postings, suffix_pairs
+
     sig = minhash_signatures(spark, sf)
     bands = sig.select(
         "doc_id",
@@ -635,21 +633,8 @@ def minhash_lsh_pairs(spark: SparkSession, sf: str) -> DataFrame:
             )
         ).alias("bb"),
     ).select("doc_id", "bb.band", "bb.k1", "bb.k2")
-    grouped = (
-        bands.groupBy("band", "k1", "k2")
-        .agg(F.sort_array(F.collect_list("doc_id")).alias("ids"))
-        .where((F.size("ids") >= 2) & (F.size("ids") <= 100))
-    )
-    return (
-        grouped.select(F.posexplode("ids").alias("_i", "doc_a"), "ids")
-        .select(
-            "doc_a",
-            F.explode(
-                F.slice("ids", F.col("_i") + 2, F.size("ids"))
-            ).alias("doc_b"),
-        )
-        .distinct()
-    )
+    postings = capped_postings(bands, ["band", "k1", "k2"], "doc_id", 100)
+    return suffix_pairs(postings, "doc_a", "doc_b").distinct()
 
 
 MINHASH_PAIRS_SQL = """
@@ -729,62 +714,27 @@ def ngram_jaccard_pairs(spark: SparkSession, sf: str) -> DataFrame:
     mirrored token-for-token in JACCARD_SQL so the oracle compares the
     identical definition.
 
-    r7 plan: per-doc distinct tokens come from ``array_distinct`` in the
-    map pass (the old ``.distinct()`` exchange over exploded rows is
-    gone — (doc, tok) duplicates only ever arise within one doc), and
-    ONE groupBy(tok) collects each token's sorted posting list, from
-    which document-frequency filtering (``size(ids)``), per-doc sizes
-    (re-explode the kept lists) and intersection counts (suffix pair
-    generation, the minhash_lsh_pairs pattern) all derive — replacing
-    the dfreq aggregate + broadcast semi-join + two-legged self-join
-    with one keyed exchange whose shuffle files both consumers reuse
-    (ReusedExchange, guide §2.4). Pair semantics are unchanged: a
-    bucket's suffix pairs are exactly {(a, b) : a < b}, counted per
-    pair = |shared kept tokens|, and sizes count singleton buckets too
-    (filter at <= max_df only), exactly like the semi-joined relation.
-    """
+    Plan: per-doc distinct tokens come from ``array_distinct`` in the
+    map pass (no ``.distinct()`` exchange — (doc, tok) duplicates only
+    ever arise within one doc), then ``operators/dedup.jaccard_counts``:
+    ONE capped posting-list exchange per token (``capped_postings``,
+    which drops a token in more than floor(n/2) docs after at most
+    floor(n/2)+1 of its rows reach the list), from which per-doc sizes
+    (singleton tokens included, like the oracle's ``sizes``) and
+    intersection counts (``suffix_pairs`` counted per pair = |shared
+    kept tokens|) both derive. Rounding to 4 places and the >= 0.8
+    threshold on the rounded value match JACCARD_SQL."""
+    from .operators.dedup import jaccard_counts
+
     d = _t(spark, sf, "documents")
     n_docs = d.count()
     tok = _spread(d).select(
         "doc_id", F.explode(F.array_distinct(F.expr(_TOKENIZE_SPARK))).alias("tok")
     )
-    kept = (
-        tok.groupBy("tok")
-        .agg(F.sort_array(F.collect_list("doc_id")).alias("ids"))
-        .where(F.size("ids") <= int(0.5 * n_docs))
-    )
-    sizes = (
-        kept.select(F.explode("ids").alias("doc_id"))
-        .groupBy("doc_id")
-        .agg(F.count("*").alias("sz"))
-    )
-    inter = (
-        kept.where(F.size("ids") >= 2)
-        .select(F.posexplode("ids").alias("_i", "doc_a"), "ids")
-        .select(
-            "doc_a",
-            F.explode(
-                F.slice("ids", F.col("_i") + 2, F.size("ids"))
-            ).alias("doc_b"),
-        )
-        .groupBy("doc_a", "doc_b")
-        .agg(F.count("*").alias("inter"))
-    )
-    sa = sizes.select(F.col("doc_id").alias("doc_a"), F.col("sz").alias("sz_a"))
-    sb = sizes.select(F.col("doc_id").alias("doc_b"), F.col("sz").alias("sz_b"))
     return (
-        inter.join(sa, "doc_a")
-        .join(sb, "doc_b")
-        .withColumn(
-            "jaccard",
-            F.round(
-                F.col("inter").cast("double")
-                / (F.col("sz_a") + F.col("sz_b") - F.col("inter")),
-                4,
-            ),
-        )
+        jaccard_counts(tok, "doc_id", "tok", int(0.5 * n_docs), "doc_a", "doc_b")
+        .withColumn("jaccard", F.round("jaccard", 4))
         .where(F.col("jaccard") >= 0.8)
-        .select("doc_a", "doc_b", "jaccard")
     )
 
 
