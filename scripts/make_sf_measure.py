@@ -33,14 +33,13 @@ import pyarrow as pa
 import pyarrow.parquet as pq
 
 SRC = "/root/testdata/sf0.1"
-OUT = sys.argv[1] if len(sys.argv) > 1 else "/dev/shm/sf1.0m"
 COPIES = int(os.environ.get("SF_MEASURE_COPIES", "10"))
 SEED = 42
 
 
-def _write(name: str, table: pa.Table) -> None:
-    os.makedirs(OUT, exist_ok=True)
-    pq.write_table(table, f"{OUT}/{name}.parquet")
+def _write(out: str, name: str, table: pa.Table) -> None:
+    os.makedirs(out, exist_ok=True)
+    pq.write_table(table, f"{out}/{name}.parquet")
     print(f"{name}: {table.num_rows} rows")
 
 
@@ -64,7 +63,7 @@ def _domain_offsets() -> dict[str, int]:
     }
 
 
-def tile(name: str, shift_cols: dict[str, str], doms: dict[str, int]) -> None:
+def tile(out_dir: str, name: str, shift_cols: dict[str, str], doms: dict[str, int]) -> None:
     """Union COPIES copies of the sf0.1 table, shifting each key column
     by copy * domain_offset so copies never collide on keys while
     cross-table joins stay aligned."""
@@ -79,14 +78,14 @@ def tile(name: str, shift_cols: dict[str, str], doms: dict[str, int]) -> None:
     import pandas as pd
 
     out = pd.concat(parts, ignore_index=True)
-    _write(name, pa.Table.from_pandas(out, schema=t.schema, preserve_index=False))
+    _write(out_dir, name, pa.Table.from_pandas(out, schema=t.schema, preserve_index=False))
 
 
-def copy_table(name: str) -> None:
-    _write(name, pq.read_table(f"{SRC}/{name}.parquet"))
+def copy_table(out_dir: str, name: str) -> None:
+    _write(out_dir, name, pq.read_table(f"{SRC}/{name}.parquet"))
 
 
-def gen_documents() -> None:
+def gen_documents(out_dir: str) -> None:
     t = pq.read_table(f"{SRC}/documents.parquet").to_pandas()
     rng = np.random.default_rng(SEED)
     # empirical marginals from the driver's sf0.1 documents
@@ -124,10 +123,10 @@ def gen_documents() -> None:
     )
     out["n_chars"] = out.text.str.len().astype("int64")
     schema = pq.read_table(f"{SRC}/documents.parquet").schema
-    _write("documents", pa.Table.from_pandas(out, schema=schema, preserve_index=False))
+    _write(out_dir, "documents", pa.Table.from_pandas(out, schema=schema, preserve_index=False))
 
 
-def gen_embeddings() -> None:
+def gen_embeddings(out_dir: str) -> None:
     t = pq.read_table(f"{SRC}/embeddings.parquet")
     df = t.to_pandas()
     rng = np.random.default_rng(SEED)
@@ -147,26 +146,28 @@ def gen_embeddings() -> None:
             ]
         parts.append(c)
     out = pd.concat(parts, ignore_index=True)
-    _write("embeddings", pa.Table.from_pandas(out, schema=t.schema, preserve_index=False))
+    _write(out_dir, "embeddings", pa.Table.from_pandas(out, schema=t.schema, preserve_index=False))
 
 
 def main() -> None:
+    out = sys.argv[1] if len(sys.argv) > 1 else "/dev/shm/sf1.0m"
     doms = _domain_offsets()
     tile(
+        out,
         "lineitem",
         {"l_orderkey": "orderkey", "l_partkey": "partkey", "l_suppkey": "suppkey"},
         doms,
     )
-    tile("orders", {"o_orderkey": "orderkey", "o_custkey": "custkey"}, doms)
-    tile("customer", {"c_custkey": "custkey"}, doms)
-    tile("part", {"p_partkey": "partkey"}, doms)
-    tile("supplier", {"s_suppkey": "suppkey"}, doms)
-    tile("events", {"event_id": "event_id", "user_id": "user_id"}, doms)
-    copy_table("nation")
-    copy_table("region")
-    gen_documents()
-    gen_embeddings()
-    open(f"{OUT}/_DONE", "w").write("ok\n")
+    tile(out, "orders", {"o_orderkey": "orderkey", "o_custkey": "custkey"}, doms)
+    tile(out, "customer", {"c_custkey": "custkey"}, doms)
+    tile(out, "part", {"p_partkey": "partkey"}, doms)
+    tile(out, "supplier", {"s_suppkey": "suppkey"}, doms)
+    tile(out, "events", {"event_id": "event_id", "user_id": "user_id"}, doms)
+    copy_table(out, "nation")
+    copy_table(out, "region")
+    gen_documents(out)
+    gen_embeddings(out)
+    open(f"{out}/_DONE", "w").write("ok\n")
 
 
 if __name__ == "__main__":

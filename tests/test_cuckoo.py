@@ -65,13 +65,13 @@ def test_cuckoo_saturation_degrades_not_breaks(spark, keysets):
 
 def test_cuckoo_incremental_insert(spark, keysets):
     """Cross-round maintenance: build from half the keys, insert the
-    rest driver-side — no false negatives over the union, and the
-    antijoin still matches exact."""
+    rest with the distributed insert — no false negatives over the
+    union, and the antijoin still matches exact."""
     seen, cand = keysets
     first_half = seen.limit(2500).persist()
     filt = CuckooSeenSet.build(first_half, "url", expected_items=10000)
     rest = seen.join(first_half, "url", "left_anti")
-    assert filt.insert_hashes(*spark_key_hasher(spark, rest, "url"))
+    assert filt.insert_df(rest, "url")
     h1, h2 = spark_key_hasher(spark, seen, "url")
     assert filt._probe_arrays(h1, h2).all()
     got = sorted(

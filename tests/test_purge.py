@@ -62,36 +62,58 @@ def test_purge_refetch_rollback(spark, tmp_path, filt):
     assert eng.purges.last_commit() == 0  # purge commit rolled back
 
 
-def test_rollback_past_purge_resets_filters(spark, tmp_path):
+@pytest.mark.parametrize(
+    "tier,rollback_tier",
+    [
+        pytest.param("bloom", "bloom", id="bloom"),
+        pytest.param("cuckoo", "cuckoo", id="cuckoo"),
+        pytest.param("cuckoo", "exact", id="cuckoo-rollback-by-exact"),
+    ],
+)
+def test_rollback_past_purge_resets_filters(spark, tmp_path, tier, rollback_tier):
     """The one interleaving where stale-but-safe would break: store X →
     purge X → REBUILD the filter from seen-minus-purged (X absent) →
     rollback past the purge (X back in the authoritative seen set). A
-    kept filter would report X definitely-new and store a duplicate;
-    rollback must reset filters whenever purge commits were dropped."""
+    kept filter — in memory or as its checkpoint — would report X
+    definitely-new and store a duplicate; rollback must reset filters
+    whenever purge commits were dropped. The tier is chosen per run, so
+    the rolling-back engine may run another tier than the checkpoint's
+    owner, which the next run of that tier then loads."""
     web = make_web(seed=5, n_hosts=3, n_seed_roots=2, depth=1)
     wh = str(tmp_path / "wh")
-    eng = CrawlEngine(spark, wh, mode="reproduction", seen_filter="cuckoo")
+    eng = CrawlEngine(spark, wh, mode="reproduction", seen_filter=tier)
     eng.set_web(web)
     eng.seed_urls(web.seeds)
     eng.run(max_rounds=10)
     pre_round = eng.current_round() - 1
     gather0 = {r["image_id"] for r in eng.gather().collect()}
-    url, key = next(
+    stored_leaves = [
         (u, p["image_id"])
         for u, p in web.pages.items()
         if p["kind"] == "leaf" and p["image_id"] in gather0
-    )
+    ]
+    url, key = stored_leaves[0]
+    other_url = next(u for u, k in stored_leaves if k != key)
     eng.purge_images([key])
     # force a filter rebuild from the post-purge seen set: the rebuilt
-    # filter genuinely lacks X's fingerprint (no dirty-bucket safety)
-    eng._cuckoo = None
+    # filter genuinely lacks X's entry (no dirty-bucket safety). The
+    # round fetches a DIFFERENT stored leaf, so X is not re-stored and
+    # the rebuilt filter (and its checkpoint) still lacks X
+    eng._filter = None
     import shutil
 
-    shutil.rmtree(eng._cuckoo_dir, ignore_errors=True)
-    eng.seed_urls([url], url_types=["leaf"])
-    eng.run(max_rounds=5)  # builds the filter without X, re-stores X
+    shutil.rmtree(eng._filter_dir, ignore_errors=True)
+    eng.seed_urls([other_url], url_types=["leaf"])
+    eng.run(max_rounds=5)
 
-    eng.rollback_to_round(pre_round)  # purge dropped: X is seen again
+    # purge dropped: X is seen again
+    if rollback_tier == tier:
+        eng.rollback_to_round(pre_round)
+    else:
+        other = CrawlEngine(spark, wh, mode="reproduction", seen_filter=rollback_tier)
+        other.rollback_to_round(pre_round)
+        eng = CrawlEngine(spark, wh, mode="reproduction", seen_filter=tier)
+        eng.set_web(web)
     eng.seed_urls([url], url_types=["leaf"])
     eng.run(max_rounds=5)
     rows = eng.images.read(spark).where(F.col("image_id") == key).count()

@@ -5,13 +5,14 @@ partitioned-cuckoo upgrade path, hardened):
   OR-merging each round's stored keys — the steady-state round launches
   no O(seen) job over the images table (the rebuild-per-round
   anti-pattern this file exists to forbid);
-- cuckoo mode checkpoints shard blobs under the warehouse: a restarted
-  engine reloads them (witnessed by forbidding `build`) and catches up
+- both tiers checkpoint under the warehouse: a restarted engine reloads
+  the checkpoint (witnessed by forbidding `build`) and catches up
   commits past the saved watermark in O(delta), so a crash between the
   images commit and the filter save can never yield duplicate stores;
 - after rollback both filters are stale-but-SAFE: they may keep
   fingerprints of rolled-back keys (false positives, absorbed by the
-  exact confirm) but never report a stored key as new.
+  exact confirm) but never report a stored key as new, and the
+  checkpoint is re-stamped at the rolled-back head (or dropped).
 """
 
 import os
@@ -53,120 +54,78 @@ def test_bloom_built_once_and_maintained(spark, web, tmp_path, monkeypatch):
     stats = eng.run(max_rounds=20)
     assert len(stats) >= 3  # multi-round crawl...
     assert len(calls) == 1  # ...but exactly one filter build
-    assert eng._bloom is not None and eng._bloom.n_inserted > 0
+    assert eng._filter is not None and eng._filter.n_inserted > 0
     sim = simulate_crawl(web)
     stored = _stored(eng)
     assert {k for k, _ in stored} == sim.seen_set
     assert len(stored) == len(sim.seen_set)  # no duplicate stores
 
 
-def test_bloom_restart_reloads_checkpoint(spark, web, tmp_path, monkeypatch):
+TIERS = {"bloom": seen_mod.BloomSeenSet, "cuckoo": cuckoo_mod.CuckooSeenSet}
+
+
+def _forbid_build(monkeypatch, tier):
+    def boom(*a, **kw):  # a restart must never pay the O(seen) rebuild
+        raise AssertionError(f"{tier} filter build called after restart")
+
+    monkeypatch.setattr(TIERS[tier], "build", staticmethod(boom))
+
+
+def _emptied(filt):
+    """A filter of the same shape with every entry cleared."""
+    if isinstance(filt, seen_mod.BloomSeenSet):
+        return seen_mod.BloomSeenSet(
+            filt.bits_per_shard,
+            filt.n_hashes,
+            filt.shards * 0,
+            capacity=filt.capacity,
+            n_inserted=0,
+        )
+    return cuckoo_mod.CuckooSeenSet(
+        filt.n_buckets, filt.slots, filt.shards * 0, filt.saturated & False
+    )
+
+
+@pytest.mark.parametrize("tier", ["bloom", "cuckoo"])
+def test_restart_reloads_checkpoint(spark, web, tmp_path, monkeypatch, tier):
     wh = str(tmp_path / "wh")
-    eng = CrawlEngine(spark, wh, mode="reproduction", seen_filter="bloom")
+    eng = CrawlEngine(spark, wh, mode="reproduction", seen_filter=tier)
     eng.set_web(web)
     eng.seed_urls(web.seeds)
     eng.run(max_rounds=20)
     first = _stored(eng)
-    assert os.path.exists(os.path.join(wh, "_filters", "bloom", "current.json"))
+    assert os.path.exists(os.path.join(wh, "_filters", tier, "current.json"))
 
-    def boom(*a, **kw):  # a restart must never pay the O(seen) rebuild
-        raise AssertionError("BloomSeenSet.build called after restart")
-
-    monkeypatch.setattr(seen_mod.BloomSeenSet, "build", staticmethod(boom))
-    eng2 = CrawlEngine(spark, wh, mode="reproduction", seen_filter="bloom")
+    _forbid_build(monkeypatch, tier)
+    eng2 = CrawlEngine(spark, wh, mode="reproduction", seen_filter=tier)
     eng2.set_web(web)
     eng2.seed_urls(web.seeds)  # re-enqueue everything: all dup payloads
     eng2.run(max_rounds=20)
     assert _stored(eng2) == first  # nothing re-stored, nothing lost
 
 
-def test_bloom_watermark_catchup_prevents_dup_stores(spark, web, tmp_path, monkeypatch):
-    """Same crash window as the cuckoo test: images commit landed but the
-    filter save didn't. The reloaded bitmap is missing those keys —
-    without the watermark catch-up they'd probe definitely-new, skip the
-    exact join, and be stored AGAIN. Simulate with an all-zero bitmap
-    stamped at watermark 0."""
-    wh = str(tmp_path / "wh")
-    eng = CrawlEngine(spark, wh, mode="reproduction", seen_filter="bloom")
-    eng.set_web(web)
-    eng.seed_urls(web.seeds)
-    eng.run(max_rounds=20)
-    first = _stored(eng)
-
-    fdir = os.path.join(wh, "_filters", "bloom")
-    filt, wm = seen_mod.BloomSeenSet.load(fdir)
-    assert wm == eng.images.last_commit()
-    empty = seen_mod.BloomSeenSet(
-        filt.bits_per_shard,
-        filt.n_hashes,
-        filt.shards * 0,
-        capacity=filt.capacity,
-        n_inserted=0,
-    )
-    empty.save(fdir, watermark=0)
-
-    monkeypatch.setattr(
-        seen_mod.BloomSeenSet,
-        "build",
-        staticmethod(lambda *a, **kw: (_ for _ in ()).throw(AssertionError("rebuild"))),
-    )
-    eng2 = CrawlEngine(spark, wh, mode="reproduction", seen_filter="bloom")
-    eng2.set_web(web)
-    eng2.seed_urls(web.seeds)
-    eng2.run(max_rounds=20)
-    assert _stored(eng2) == first  # catch-up restored coverage: no dups
-
-
-def test_cuckoo_restart_reloads_checkpoint(spark, web, tmp_path, monkeypatch):
-    wh = str(tmp_path / "wh")
-    eng = CrawlEngine(spark, wh, mode="reproduction", seen_filter="cuckoo")
-    eng.set_web(web)
-    eng.seed_urls(web.seeds)
-    eng.run(max_rounds=20)
-    first = _stored(eng)
-    assert os.path.exists(os.path.join(wh, "_filters", "cuckoo", "current.json"))
-
-    def boom(*a, **kw):  # a restart must never pay the O(seen) rebuild
-        raise AssertionError("CuckooSeenSet.build called after restart")
-
-    monkeypatch.setattr(cuckoo_mod.CuckooSeenSet, "build", staticmethod(boom))
-    eng2 = CrawlEngine(spark, wh, mode="reproduction", seen_filter="cuckoo")
-    eng2.set_web(web)
-    eng2.seed_urls(web.seeds)  # re-enqueue everything: all dup payloads
-    eng2.run(max_rounds=20)
-    assert _stored(eng2) == first  # nothing re-stored, nothing lost
-
-
-def test_cuckoo_watermark_catchup_prevents_dup_stores(
-    spark, web, tmp_path, monkeypatch
-):
+@pytest.mark.parametrize("tier", ["bloom", "cuckoo"])
+def test_watermark_catchup_prevents_dup_stores(spark, web, tmp_path, monkeypatch, tier):
     """Crash window: images commit landed but the filter save didn't.
     The reloaded filter is missing those keys — without the watermark
     catch-up they'd probe definitely-new, skip the exact join, and be
-    stored AGAIN (duplicate rows). Simulate by re-stamping the checkpoint
-    at watermark 1."""
+    stored AGAIN (duplicate rows). Simulate with an emptied filter
+    stamped at watermark 0."""
     wh = str(tmp_path / "wh")
-    eng = CrawlEngine(spark, wh, mode="reproduction", seen_filter="cuckoo")
+    eng = CrawlEngine(spark, wh, mode="reproduction", seen_filter=tier)
     eng.set_web(web)
     eng.seed_urls(web.seeds)
     eng.run(max_rounds=20)
     first = _stored(eng)
 
-    fdir = os.path.join(wh, "_filters", "cuckoo")
-    filt, wm = cuckoo_mod.CuckooSeenSet.load(fdir)
+    fdir = os.path.join(wh, "_filters", tier)
+    filt, wm = TIERS[tier].load(fdir)
     assert wm == eng.images.last_commit()
-    # a filter state that predates most of the crawl, stamped honestly
-    empty = cuckoo_mod.CuckooSeenSet(
-        filt.n_buckets, filt.slots, filt.shards * 0, filt.saturated & False
-    )
-    empty.save(fdir, watermark=0)
+    # a filter state that predates the whole crawl, stamped honestly
+    _emptied(filt).save(fdir, watermark=0)
 
-    monkeypatch.setattr(
-        cuckoo_mod.CuckooSeenSet,
-        "build",
-        staticmethod(lambda *a, **kw: (_ for _ in ()).throw(AssertionError("rebuild"))),
-    )
-    eng2 = CrawlEngine(spark, wh, mode="reproduction", seen_filter="cuckoo")
+    _forbid_build(monkeypatch, tier)
+    eng2 = CrawlEngine(spark, wh, mode="reproduction", seen_filter=tier)
     eng2.set_web(web)
     eng2.seed_urls(web.seeds)
     eng2.run(max_rounds=20)
@@ -185,5 +144,9 @@ def test_rollback_filter_stale_but_safe(spark, web, tmp_path, filt):
     eng.run(max_rounds=20)
     final = _stored(eng)
     eng.rollback_to_round(0)
+    # commit ids are reused after a rollback: a checkpoint left stamped
+    # past the head would alias them and skip a later watermark catch-up
+    loaded = TIERS[filt].load(os.path.join(wh, "_filters", filt))
+    assert loaded is None or loaded[1] == eng.images.last_commit()
     eng.run(max_rounds=20)  # same engine: in-memory filter is stale now
     assert _stored(eng) == final

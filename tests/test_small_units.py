@@ -2,6 +2,7 @@
 
 import importlib.util
 import os
+import sys
 
 import pyarrow.parquet as pq
 
@@ -31,8 +32,12 @@ def test_make_sf_measure_import_reads_no_parquet(monkeypatch):
         raise AssertionError("parquet read at import time")
 
     monkeypatch.setattr(pq, "read_table", no_read)
+    sentinel = "/nonexistent/sentinel-out-dir"
+    monkeypatch.setattr(sys, "argv", ["make_sf_measure.py", sentinel])
     path = os.path.join(ROOT, "scripts", "make_sf_measure.py")
     spec = importlib.util.spec_from_file_location("make_sf_measure", path)
     mod = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(mod)
     assert callable(mod.main)
+    # the output dir is a command-line argument, parsed in main() only
+    assert sentinel not in vars(mod).values()

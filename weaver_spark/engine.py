@@ -22,13 +22,14 @@ re-running produces byte-identical state (tested in tests/test_resume.py).
 Reproduction mode matches the reference semantics (SURVEY.md §0.1) and is
 asserted equal to the pure-Python simulator (sim.py) on crawl order,
 enqueue log, seen set and stored rows. Scale mode turns on the north-rule
-upgrades: per-host politeness budgets via skew-safe salted window rank,
-priority ordering, Bloom-prefiltered seen anti-join.
+upgrades: per-host politeness budgets via skew-safe salted window rank and
+priority ordering. The seen anti-join's prefilter (``seen_filter``: exact
+by default, bloom or cuckoo) is independent of the mode.
 
 Scale notes (10^10 frontier, 1000 executors):
 - No stage in the loop collects data: the only driver-side values are
   per-partition counts (dense_seq offsets), a handful of scalars
-  (pending count, max seq) and Bloom shard bitmaps.
+  (pending count, max seq) and prefilter shard blobs.
 - The frontier is never rewritten: status changes are O(batch) delta
   appends; `DeltaTable.compact` folds the log between crawls.
 - The fetch stage repartitions by (host, salt) so one mega-host cannot
@@ -52,10 +53,16 @@ from pyspark.sql.types import StringType
 
 from .catalog import Catalog, TableBackend
 from .functions.urls import canonicalize_series, resolve_series
+from .operators.cuckoo import CuckooSeenSet, spark_key_hasher
 from .operators.fetch import make_synthetic_fetch_fn
 from .operators.ranking import budget_rank, dense_seq_numeric, topk_per_group
 from .operators.robots import DELAY_CAP_COL, DELAY_MS_COL, apply_robots
-from .operators.seen import BloomSeenSet, antijoin_bloom, antijoin_exact
+from .operators.seen import (
+    BloomSeenSet,
+    antijoin_bloom,
+    antijoin_exact,
+    antijoin_prefiltered,
+)
 from .schemas import (
     FETCH_RESULT_SCHEMA,
     FRONTIER_SCHEMA,
@@ -180,14 +187,13 @@ class CrawlEngine:
             seen_filter = "exact"
         assert seen_filter in ("exact", "bloom", "cuckoo")
         self.seen_filter = seen_filter
-        # persistent cross-round seen filters: built once, maintained by
-        # per-round distributed inserts of newly-stored keys (never an
-        # O(seen)-per-round rebuild); cuckoo state also checkpoints to
-        # the warehouse so restarts resume from a watermark
-        self._cuckoo = None
-        self._bloom = None
-        self._cuckoo_dir = os.path.join(warehouse, "_filters", "cuckoo")
-        self._bloom_dir = os.path.join(warehouse, "_filters", "bloom")
+        # the persistent cross-round prefilter of the bloom/cuckoo tiers:
+        # built once, maintained by per-round distributed inserts of
+        # newly-stored keys (never an O(seen)-per-round rebuild), and
+        # checkpointed to the warehouse so restarts resume from a
+        # watermark (_prepare_filter / _stamp_filter)
+        self._filter = None
+        self._filter_dir = os.path.join(warehouse, "_filters", seen_filter)
         self.track_leases = track_leases
         self.lease_timeout_s = lease_timeout_s
         self.seed = seed
@@ -724,7 +730,7 @@ class CrawlEngine:
            storage-dedup anti-join exclude the key immediately, so the
            next ENQUEUE of its URL re-fetches and re-stores it;
         2. cuckoo fingerprint deletion (dirty-bucket exactness,
-           operators/cuckoo.delete_hashes) + checkpoint re-save — bloom
+           operators/cuckoo.delete_hashes) + checkpoint re-stamp — bloom
            cannot delete, so its stale bits stay as false positives that
            the exact confirm absorbs;
         3. a round-stamped manifest, so ``rollback_to_round`` to a
@@ -740,18 +746,66 @@ class CrawlEngine:
             [(k, max_seq, now) for k in sorted(set(image_ids))],
             meta={"op": "purge", "round": self.current_round(), "n": len(image_ids)},
         )
-        if self._cuckoo is not None:
-            from .operators.cuckoo import spark_key_hasher
-
+        if isinstance(self._filter, CuckooSeenSet):
             keys_df = self.spark.createDataFrame(
                 [(k,) for k in image_ids], "image_id string"
             )
-            self._cuckoo.delete_hashes(
+            self._filter.delete_hashes(
                 *spark_key_hasher(self.spark, keys_df, "image_id")
             )
-            if not self._cuckoo.saturated.any():
-                self._cuckoo.save(self._cuckoo_dir, self.images.last_commit())
+            self._stamp_filter()
         return cid
+
+    # -- persistent seen filter (bloom / cuckoo tiers) -----------------------
+
+    def _prepare_filter(self, seen_keys: DataFrame) -> None:
+        """Make ``self._filter`` cover every stored key, cheapest first:
+        reuse the live filter; else reload the warehouse checkpoint and
+        insert the images commits past its watermark (O(delta): a crash
+        between the images commit and the filter save loses nothing);
+        else build once from the seen set with 4x headroom. A filter
+        whose ``needs_rebuild`` is set (bloom over capacity, a saturated
+        cuckoo shard) is skipped. Stale entries left by a rollback or a
+        purge are false positives only — the exact confirm is always
+        authoritative."""
+        cls = BloomSeenSet if self.seen_filter == "bloom" else CuckooSeenSet
+        if self._filter is not None and self._filter.needs_rebuild:
+            self._filter = None
+        if self._filter is None:
+            loaded = cls.load(self._filter_dir)
+            if loaded is not None:
+                filt, wm = loaded
+                head = self.images.last_commit()
+                if wm < head:
+                    filt.insert_df(
+                        self.images.read_since(self.spark, wm).select("image_id"),
+                        "image_id",
+                    )
+                if not filt.needs_rebuild:
+                    self._filter = filt
+                    # wm > head (a crash mid-rollback before the re-stamp)
+                    # leaves a superset — safe — but its watermark would
+                    # alias reused commit ids and skip a later catch-up
+                    if wm != head:
+                        self._stamp_filter()
+        if self._filter is None:
+            seen_count = seen_keys.count()
+            self._filter = cls.build(
+                seen_keys,
+                "image_id",
+                expected_items=max(seen_count * 4, 4096),
+                n_shards=4,
+            )
+            self._stamp_filter()
+
+    def _stamp_filter(self) -> None:
+        """Checkpoint the live filter at the current images head, or drop
+        the checkpoint when there is no live filter, so a stale one can
+        never load."""
+        if self._filter is not None:
+            self._filter.save(self._filter_dir, self.images.last_commit())
+        else:
+            shutil.rmtree(self._filter_dir, ignore_errors=True)
 
     def purge_vacuum(self) -> int:
         """Physically delete purge-dead payload rows — the GDPR
@@ -1146,89 +1200,18 @@ class CrawlEngine:
             ).select("enqueue_seq", F.col("url").alias("image_id"))
         firsts = topk_per_group(payload_keys, ["image_id"], ["enqueue_seq"], 1)
         seen_keys = self._seen_keys_df()  # stored minus purged (purge API)
-        if self.seen_filter == "bloom":
-            # persistent filter: built ONCE with 4x headroom, then
-            # maintained by OR-ing in each round's stored keys (bitmaps
-            # merge trivially — BloomSeenSet.insert_df below). No
-            # per-round seen count, no O(seen) rebuild; rebuilt only when
-            # inserts outgrow the sized capacity (amortized doubling).
-            # Stale bits after rollback/purge are false positives only —
-            # the exact confirm is always authoritative.
-            if self._bloom is not None and self._bloom.over_capacity:
-                self._bloom = None
-            if self._bloom is None:
-                # warehouse checkpoint first (same contract as cuckoo):
-                # catch up commits past the saved watermark in O(delta),
-                # clamp a stale post-rollback watermark to the current
-                # head so reused commit ids can't skip a future catch-up
-                loaded = BloomSeenSet.load(self._bloom_dir)
-                if loaded is not None:
-                    filt, wm = loaded
-                    cur = self.images.last_commit()
-                    if wm < cur:  # crash between images commit and save
-                        filt.insert_df(
-                            self.images.read_since(spark, wm).select("image_id"),
-                            "image_id",
-                        )
-                    if not filt.over_capacity:
-                        if wm != cur:
-                            filt.save(self._bloom_dir, cur)
-                        self._bloom = filt
-            if self._bloom is None:
-                seen_count = seen_keys.count()
-                self._bloom = BloomSeenSet.build(
-                    seen_keys,
-                    "image_id",
-                    expected_items=max(seen_count * 4, 4096),
-                    n_shards=4,
-                )
-                self._bloom.save(self._bloom_dir, self.images.last_commit())
-            winner_keys = antijoin_bloom(
-                firsts, seen_keys, "image_id", filt=self._bloom
-            )
-        elif self.seen_filter == "cuckoo":
-            from .operators.cuckoo import CuckooSeenSet, antijoin_cuckoo
-
-            # persistent filter: reloaded from its warehouse checkpoint
-            # (catching up commits past the saved watermark in O(delta))
-            # or built once (4x headroom), then maintained by the
-            # one-task-per-shard distributed insert below — never rebuilt
-            # from the full seen set unless a shard saturates
-            # (O(seen)-per-round rebuilds are the shape the 10^10 design
-            # forbids). Rollbacks/external deletes only leave stale
-            # fingerprints = false positives = exact-confirm traffic,
-            # never a wrong result.
-            if self._cuckoo is not None and self._cuckoo.saturated.any():
-                self._cuckoo = None
-            if self._cuckoo is None:
-                loaded = CuckooSeenSet.load(self._cuckoo_dir)
-                if loaded is not None:
-                    filt, wm = loaded
-                    cur = self.images.last_commit()
-                    if wm < cur:  # crash between images commit and save
-                        filt.insert_df(
-                            self.images.read_since(spark, wm).select("image_id"),
-                            "image_id",
-                        )
-                    # wm > cur (crash mid-rollback before the re-stamp):
-                    # the filter is a superset — safe — but the STALE
-                    # watermark would alias reused commit ids and skip a
-                    # future catch-up; clamp it to the current head now.
-                    if not filt.saturated.any():
-                        if wm != cur:
-                            filt.save(self._cuckoo_dir, cur)
-                        self._cuckoo = filt
-            if self._cuckoo is None:
-                seen_count = seen_keys.count()
-                self._cuckoo = CuckooSeenSet.build(
-                    seen_keys, "image_id", expected_items=max(seen_count * 4, 4096)
-                )
-                self._cuckoo.save(self._cuckoo_dir, self.images.last_commit())
-            winner_keys = antijoin_cuckoo(
-                firsts, seen_keys, "image_id", expected_items=0, filt=self._cuckoo
-            )
-        else:
+        if self.seen_filter == "exact":
             winner_keys = antijoin_exact(firsts, seen_keys, "image_id")
+        else:
+            self._prepare_filter(seen_keys)
+            if self.seen_filter == "bloom":
+                winner_keys = antijoin_bloom(
+                    firsts, seen_keys, "image_id", filt=self._filter
+                )
+            else:
+                winner_keys = antijoin_prefiltered(
+                    firsts, seen_keys, "image_id", self._filter
+                )
         # purge liveness applies to CANDIDATES too: an enqueue that
         # predates a purge of its key (enqueue_seq <= purge_seq) loses to
         # the purge — storing it would write a permanently-invisible row
@@ -1236,7 +1219,7 @@ class CrawlEngine:
         # revives only via a post-purge enqueue. Same one rule as the
         # seen set and gather (_alive_after_purge).
         winner_keys = self._alive_after_purge(winner_keys)
-        if self.seen_filter in ("bloom", "cuckoo"):
+        if self._filter is not None:
             # the winners pipeline feeds both the fetch stage and the
             # filter-maintenance job — pin it so maintenance reuses the
             # computed keys instead of re-running the firsts window +
@@ -1347,9 +1330,9 @@ class CrawlEngine:
         # persistent filter via its DISTRIBUTED insert path (bloom: one
         # partial bitmap per task, OR-merged; cuckoo: one task per shard
         # returning one blob) — the driver receives fixed-size blobs,
-        # never per-key rows. Both filters checkpoint to the warehouse
-        # so a restart resumes from the watermark.
-        if img_commit is not None and self.seen_filter in ("bloom", "cuckoo"):
+        # never per-key rows — then the checkpoint is re-stamped so a
+        # restart resumes from the watermark.
+        if img_commit is not None and self._filter is not None:
             if pages is None:
                 # http mode: the STORED keys are the post-redirect finals
                 # (reconciled above) — read them from the adopted files
@@ -1359,13 +1342,9 @@ class CrawlEngine:
                 ).select("image_id")
             else:
                 new_keys = winner_keys.select("image_id")
-            if self.seen_filter == "bloom":
-                self._bloom.insert_df(new_keys, "image_id")
-                self._bloom.save(self._bloom_dir, self.images.last_commit())
-            else:
-                self._cuckoo.insert_df(new_keys, "image_id")
-                self._cuckoo.save(self._cuckoo_dir, self.images.last_commit())
-        if self.seen_filter in ("bloom", "cuckoo"):
+            self._filter.insert_df(new_keys, "image_id")
+            self._stamp_filter()
+        if self._filter is not None:
             winner_keys.unpersist()
         # the adoption MOVED sink=p (or its reconciled winner split):
         # rebind downstream consumers to the surviving locations (same
@@ -1726,31 +1705,33 @@ class CrawlEngine:
         self.purges.rollback(_keep_by_round(self.purges, legacy_index=False))
         self._next_round = None  # recompute from lineage next round
         self._carry = None  # head scalars no longer describe the log
-        # the in-memory seen filters (_bloom/_cuckoo) deliberately stay
-        # STALE-BUT-SAFE: they may keep fingerprints of rolled-back keys
-        # (false positives → exact-confirm traffic only) but still cover
-        # every key in the rolled-back table, so they can never report a
-        # stored key as new (tests/test_seen_persistence.py pins this).
-        # TWO exceptions are handled conservatively:
+        # the in-memory seen filter deliberately stays STALE-BUT-SAFE: it
+        # may keep entries of rolled-back keys (false positives →
+        # exact-confirm traffic only) but still covers every key in the
+        # rolled-back table, so it can never report a stored key as new
+        # (tests/test_seen_persistence.py pins this). TWO exceptions are
+        # handled conservatively:
         # 1. A rolled-back PURGE breaks the superset property: a filter
         #    (re)built after the purge lacks the now-revived key — a
-        #    false-NEGATIVE generator. Reset both filters + checkpoint;
-        #    the next round rebuilds from the authoritative seen set
-        #    (O(seen) once, on a rare recovery op).
+        #    false-NEGATIVE generator. Drop the filter and its
+        #    checkpoint; the next round rebuilds from the authoritative
+        #    seen set (O(seen) once, on a rare recovery op).
         # 2. Commit ids are REUSED after rollback (catalog semantics),
-        #    so a saved cuckoo watermark could alias future commits and
-        #    silently skip their catch-up. Re-stamp the superset filter
-        #    at the rolled-back commit, or drop the checkpoint if there
-        #    is no live filter to re-stamp.
+        #    so a saved watermark could alias future commits and silently
+        #    skip their catch-up. Re-stamp the superset filter at the
+        #    rolled-back commit, or drop the checkpoint if there is no
+        #    live filter to re-stamp.
+        # Checkpoints of the OTHER tiers (left on this warehouse by runs
+        # with another seen_filter) carry both hazards and have no live
+        # filter to re-stamp: drop them.
         if self.purges.last_commit() != purges_before:
-            self._bloom = None
-            self._cuckoo = None
-            shutil.rmtree(self._cuckoo_dir, ignore_errors=True)
-        elif self.seen_filter == "cuckoo":
-            if self._cuckoo is not None and not self._cuckoo.saturated.any():
-                self._cuckoo.save(self._cuckoo_dir, self.images.last_commit())
-            else:
-                shutil.rmtree(self._cuckoo_dir, ignore_errors=True)
+            self._filter = None
+        filters_root = os.path.dirname(self._filter_dir)
+        if os.path.isdir(filters_root):
+            for tier in os.listdir(filters_root):
+                if tier != self.seen_filter:
+                    shutil.rmtree(os.path.join(filters_root, tier), ignore_errors=True)
+        self._stamp_filter()
 
     # -- reporting -----------------------------------------------------------
 

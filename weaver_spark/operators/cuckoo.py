@@ -9,8 +9,8 @@ fpp < 3%, and it supports DELETION — which the engine actually needs:
 rows, and a deletion-blind prefilter would keep reporting the purged key
 as seen forever, blocking legitimate re-fetch.
 
-Structure: ``n_shards`` independent tables (shard = h1 % n_shards — the
-same sharding as BloomSeenSet), each ``m`` buckets x ``slots`` 16-bit
+Structure: ``n_shards`` independent tables (shard = pmod(h1, n_shards),
+signed like Spark's ``pmod``), each ``m`` buckets x ``slots`` 16-bit
 fingerprints. fp = low 16 bits of h2 (0 remapped to 1); bucket
 i1 = (h1 >> 16) & (m-1); i2 = i1 XOR spread(fp) — the partial-key
 cuckoo displacement rule, so eviction needs only the stored fingerprint.
@@ -20,16 +20,20 @@ OR-merged like Bloom bitmaps (insertions displace each other), so the
 build repartitions keys by shard and builds EACH SHARD IN EXACTLY ONE
 TASK (groupBy(shard).applyInPandas) — sequential kicking inside a task,
 parallelism across shards, one small blob per shard collected to the
-driver. At 10^10 keys the shards ARE the partitions (bucket-local
-probe, no broadcast), degenerating to antijoin_copartitioned — same
-stepping stone the Bloom docstring names.
+driver. The cross-round insert is the same job over only the new keys.
+At 10^10 keys the shards ARE the partitions (bucket-local probe, no
+broadcast), degenerating to antijoin_copartitioned.
+
+Broadcast caching, the warehouse checkpoint and the prefilter-plus-
+exact-confirm anti-join are shared with the Bloom tier
+(``seen.SeenFilter``, ``seen.antijoin_prefiltered``).
 
 Correctness guarantees mirror antijoin_bloom: the filter only routes
 DEFINITELY-NEW rows around the authoritative exact anti-join, so false
 positives cost a join probe, never a wrong result. Two cuckoo-specific
 hazards are closed conservatively:
 
-- **saturation**: if a shard's kick loop overflows at build time, that
+- **saturation**: if a shard's kick loop overflows on insert, that
   shard is marked saturated and every probe landing in it reports
   maybe-seen (exact-confirmed). Correct at any load factor.
 - **deletion aliasing**: deleting key A may remove a fingerprint that a
@@ -42,16 +46,12 @@ hazards are closed conservatively:
 
 from __future__ import annotations
 
-import os
-from collections.abc import Iterator
-
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import BooleanType
 
-from .seen import _hash_cols, antijoin_exact
+from .seen import SeenFilter, _hash_cols, antijoin_prefiltered
 
 _FP_MASK = np.uint64(0xFFFF)
 _SPREAD = np.uint64(0x5BD1)  # odd multiplier spreading fp into bucket space
@@ -83,8 +83,7 @@ def _alt_bucket(i: np.ndarray, fp: np.ndarray, m: int) -> np.ndarray:
 
 def _insert_one(table: np.ndarray, i: int, fp: int, slots: int, rng) -> bool:
     """Place fp in bucket i or its alternate, kicking on conflict.
-    Returns False on kick overflow (shard saturated). Shared by the
-    distributed build and driver-side incremental inserts."""
+    Returns False on kick overflow (shard saturated)."""
     m = table.shape[0]
     alt = int(_alt_bucket(np.int64(i), np.uint16(fp), m))
     for b in (i, alt):
@@ -108,13 +107,14 @@ def _insert_one(table: np.ndarray, i: int, fp: int, slots: int, rng) -> bool:
     return False
 
 
-class CuckooSeenSet:
+class CuckooSeenSet(SeenFilter):
     def __init__(
         self,
         n_buckets: int,
         slots: int,
         shards: np.ndarray,  # (n_shards, m, slots) uint16
         saturated: np.ndarray,  # (n_shards,) bool
+        dirty: set[tuple[int, int]] | None = None,
     ):
         self.n_buckets = n_buckets
         self.slots = slots
@@ -122,15 +122,10 @@ class CuckooSeenSet:
         self.saturated = saturated
         # deletion support: buckets whose contents were mutated by a
         # delete — probes there must exact-confirm (see module docstring)
-        self.dirty: set[tuple[int, int]] = set()
+        self.dirty: set[tuple[int, int]] = set(dirty or ())
         # sorted encoded (shard * n_buckets + bucket) view of `dirty` for
         # vectorized probing; rebuilt lazily when the set changes
         self._dirty_codes: np.ndarray | None = None
-        self._bc = None  # cached probe broadcast (invalidated on mutation)
-
-    @property
-    def n_shards(self) -> int:
-        return self.shards.shape[0]
 
     @staticmethod
     def build(
@@ -141,50 +136,25 @@ class CuckooSeenSet:
         slots: int = 4,
         load_factor: float = 0.84,
     ) -> "CuckooSeenSet":
-        """One shard per task: repartition keys by shard id, build each
-        table sequentially inside its task, collect one blob per shard."""
+        """Size the tables for ``expected_items``, then fill them with the
+        same one-task-per-shard job as ``insert_df``."""
         per_shard = max(expected_items, 1) / n_shards / (slots * load_factor)
         m = 1 << max(3, int(np.ceil(np.log2(max(per_shard, 1)))))
-
-        hashed = (
-            _hash_cols(df.select(key).distinct(), key)
-            .select("_bh1", "_bh2")
-            .withColumn("_shard", F.pmod(F.col("_bh1"), F.lit(n_shards)))
+        filt = CuckooSeenSet(
+            m,
+            slots,
+            np.zeros((n_shards, m, slots), dtype=np.uint16),
+            np.zeros(n_shards, dtype=bool),
         )
+        filt.insert_df(df, key)
+        return filt
 
-        def build_shard(pdf: pd.DataFrame) -> pd.DataFrame:
-            shard_id = int(pdf["_shard"].iloc[0])
-            table = np.zeros((m, slots), dtype=np.uint16)
-            h1 = pdf["_bh1"].to_numpy(np.uint64)
-            fp_arr = _fp_of(pdf["_bh2"].to_numpy(np.uint64))
-            i1_arr = _i1_of(h1, m)
-            saturated = False
-            rng = np.random.default_rng(shard_id)  # deterministic kicks
-            for j in range(len(fp_arr)):
-                if not _insert_one(table, int(i1_arr[j]), int(fp_arr[j]), slots, rng):
-                    saturated = True  # degrade, never drop a key silently
-                    break
-            return pd.DataFrame(
-                {
-                    "shard": [shard_id],
-                    "blob": [table.tobytes()],
-                    "saturated": [saturated],
-                }
-            )
-
-        rows = (
-            hashed.groupBy("_shard")
-            .applyInPandas(build_shard, "shard long, blob binary, saturated boolean")
-            .collect()
-        )
-        shards = np.zeros((n_shards, m, slots), dtype=np.uint16)
-        saturated = np.zeros(n_shards, dtype=bool)
-        for r in rows:
-            shards[r["shard"]] = np.frombuffer(r["blob"], dtype=np.uint16).reshape(
-                m, slots
-            )
-            saturated[r["shard"]] = r["saturated"]
-        return CuckooSeenSet(m, slots, shards, saturated)
+    @property
+    def needs_rebuild(self) -> bool:
+        """A shard overflowed its kick loop and now answers maybe-seen
+        for every probe — still correct, but the owner should rebuild
+        with more headroom."""
+        return bool(self.saturated.any())
 
     # -- membership --------------------------------------------------------
 
@@ -222,83 +192,51 @@ class CuckooSeenSet:
             self._dirty_codes = codes
         return self._dirty_codes
 
-    def _invalidate_broadcast(self) -> None:
-        if self._bc is not None:
-            try:
-                self._bc.destroy()
-            except Exception:
-                pass
-            self._bc = None
-
-    def _broadcast(self, spark):
-        """One broadcast per filter VERSION: reused across probe calls
-        and rounds until a mutation (insert/delete) invalidates it — a
-        fresh broadcast of the full shard array per call leaks driver/
-        executor memory over long crawls."""
-        if self._bc is None:
-            self._bc = spark.sparkContext.broadcast(
-                (self.n_buckets, self.slots, self.shards, self.saturated, self.dirty)
-            )
-        return self._bc
-
-    def might_contain_udf(self, spark):
-        """Vectorized probe over (_bh1, _bh2) — same contract as
-        BloomSeenSet.might_contain_udf."""
-        bc = self._broadcast(spark)
-        n_shards = self.n_shards
-
-        @F.pandas_udf(BooleanType())
-        def probe(h1s: pd.Series, h2s: pd.Series) -> pd.Series:
-            m, slots, shards, saturated, dirty = bc.value
-            filt = CuckooSeenSet(m, slots, shards, saturated)
-            filt.dirty = dirty
-            assert filt.n_shards == n_shards
-            return pd.Series(
-                filt._probe_arrays(
-                    h1s.to_numpy(np.uint64), h2s.to_numpy(np.uint64)
-                )
-            )
-
-        return probe
+    def _payload(self) -> tuple:
+        return self.n_buckets, self.slots, self.shards, self.saturated, self.dirty
 
     # -- distributed maintenance ------------------------------------------
 
     def insert_df(self, key_df: DataFrame, key: str) -> bool:
-        """One-task-per-shard DISTRIBUTED insert — the cross-round
-        maintenance path at scale: new keys repartition by shard id (the
-        same grouping as build), each task copies its shard's table out
-        of the probe broadcast, runs the sequential kick loop, and
-        returns one blob. Driver traffic is one blob per TOUCHED shard —
-        independent of key count — replacing the old per-key
-        ``spark_key_hasher().collect()`` hot-loop term. A shard that
-        overflows degrades to saturated (always-maybe-seen, exact-
-        confirmed); returns False so the caller can schedule a larger
-        rebuild."""
-        spark = key_df.sparkSession
+        """One-task-per-shard DISTRIBUTED insert — the build and the
+        cross-round maintenance path at scale: keys repartition by shard
+        id, each task copies its shard's table out of the probe
+        broadcast (or starts from zeros when the filter is empty), runs
+        the sequential kick loop, and returns one blob.
+        Driver traffic is one blob per TOUCHED shard — independent of key
+        count. A shard that overflows degrades to saturated (always-
+        maybe-seen, exact-confirmed); returns False so the caller can
+        schedule a larger rebuild."""
         hashed = (
             _hash_cols(key_df.select(key).distinct(), key)
             .select("_bh1", "_bh2")
             .withColumn("_shard", F.pmod(F.col("_bh1"), F.lit(self.n_shards)))
         )
-        bc = self._broadcast(spark)
+        # an empty filter (a fresh build) sends no broadcast: each task
+        # starts its shard from zeros
+        empty = not (self.shards.any() or self.saturated.any())
+        bc = None if empty else self._broadcast(key_df.sparkSession)
         m, slots = self.n_buckets, self.slots
 
         def upd(pdf: pd.DataFrame) -> pd.DataFrame:
             sid = int(pdf["_shard"].iloc[0])
-            _m, _slots, shards, saturated, _dirty = bc.value
-            if saturated[sid]:  # already degraded: nothing to maintain
-                return pd.DataFrame(
-                    {"shard": [sid], "blob": [b""], "saturated": [True]}
-                )
-            table = shards[sid].copy()
+            if bc is None:
+                table = np.zeros((m, slots), dtype=np.uint16)
+            else:
+                _m, _slots, shards, saturated, _dirty = bc.value
+                if saturated[sid]:  # already degraded: nothing to maintain
+                    return pd.DataFrame(
+                        {"shard": [sid], "blob": [b""], "saturated": [True]}
+                    )
+                table = shards[sid].copy()
             h1 = pdf["_bh1"].to_numpy(np.uint64)
             fp_arr = _fp_of(pdf["_bh2"].to_numpy(np.uint64))
             i1_arr = _i1_of(h1, m)
-            rng = np.random.default_rng(sid)
+            rng = np.random.default_rng(sid)  # deterministic kicks
             sat = False
             for j in range(len(fp_arr)):
                 if not _insert_one(table, int(i1_arr[j]), int(fp_arr[j]), slots, rng):
-                    sat = True
+                    sat = True  # degrade, never drop a key silently
                     break
             return pd.DataFrame(
                 {"shard": [sid], "blob": [table.tobytes()], "saturated": [sat]}
@@ -314,7 +252,7 @@ class CuckooSeenSet:
             if r["blob"]:
                 self.shards[r["shard"]] = np.frombuffer(
                     r["blob"], dtype=np.uint16
-                ).reshape(m, slots).copy()
+                ).reshape(m, slots)
             if r["saturated"]:
                 self.saturated[r["shard"]] = True
                 ok = False
@@ -323,91 +261,19 @@ class CuckooSeenSet:
 
     # -- persistence (restart without the O(seen) rebuild) -----------------
 
-    def save(self, dirpath: str, watermark: int) -> None:
-        """Persist shard blobs + metadata under the warehouse (the same
-        crash discipline as the catalog: blob file first, then the
-        ``current.json`` pointer via write-temp + atomic rename).
-        ``watermark`` records the images-table commit the filter covers —
-        ``load`` catches up any later commits' keys incrementally, so a
-        restart costs O(keys since last save), never O(seen)."""
-        import json
-        import secrets
-
-        os.makedirs(dirpath, exist_ok=True)
-        token = secrets.token_hex(4)
-        blob = f"state-{token}.npz"
+    def _checkpoint(self) -> tuple[dict, dict]:
         dirty = np.array(sorted(self.dirty), dtype=np.int64).reshape(-1, 2)
-        np.savez(
-            os.path.join(dirpath, blob),
-            shards=self.shards,
-            saturated=self.saturated,
-            dirty=dirty,
+        arrays = {"shards": self.shards, "saturated": self.saturated, "dirty": dirty}
+        return {"n_buckets": self.n_buckets, "slots": self.slots}, arrays
+
+    @classmethod
+    def _from_checkpoint(cls, meta: dict, arrays: dict) -> "CuckooSeenSet":
+        dirty = {(int(a), int(b)) for a, b in arrays["dirty"]}
+        return cls(
+            meta["n_buckets"], meta["slots"], arrays["shards"], arrays["saturated"], dirty
         )
-        meta = {
-            "file": blob,
-            "watermark": watermark,
-            "n_buckets": self.n_buckets,
-            "slots": self.slots,
-        }
-        tmp = os.path.join(dirpath, f".tmp-{token}")
-        with open(tmp, "w") as f:
-            json.dump(meta, f)
-        cur = os.path.join(dirpath, "current.json")
-        os.rename(tmp, cur)  # POSIX-atomic pointer swap
-        for fn in os.listdir(dirpath):  # retire superseded blobs
-            if fn.startswith("state-") and fn != blob:
-                try:
-                    os.remove(os.path.join(dirpath, fn))
-                except OSError:
-                    pass
-
-    @staticmethod
-    def load(dirpath: str) -> tuple["CuckooSeenSet", int] | None:
-        """Reload a saved filter; returns (filter, watermark) or None if
-        nothing (readable) is persisted."""
-        import json
-
-        cur = os.path.join(dirpath, "current.json")
-        try:
-            with open(cur) as f:
-                meta = json.load(f)
-            with np.load(os.path.join(dirpath, meta["file"])) as z:
-                shards = z["shards"].copy()
-                saturated = z["saturated"].copy()
-                dirty = z["dirty"]
-        except (OSError, KeyError, ValueError):
-            return None
-        filt = CuckooSeenSet(meta["n_buckets"], meta["slots"], shards, saturated)
-        filt.dirty = {(int(a), int(b)) for a, b in dirty}
-        return filt, int(meta["watermark"])
 
     # -- deletion (the capability Bloom lacks) -----------------------------
-
-    def insert_hashes(self, h1: np.ndarray, h2: np.ndarray) -> bool:
-        """Driver-side incremental insert of (h1, h2) hash arrays — the
-        cross-round maintenance path: build once, then insert each
-        round's newly-stored keys instead of rebuilding from the full
-        seen set (an O(seen)-per-round rebuild is exactly the shape the
-        10^10 design forbids). A shard that overflows is marked
-        saturated (degrades to always-maybe-seen); returns False in that
-        case so the caller can schedule a larger rebuild. At top scale
-        inserts move into the same one-task-per-shard job as build —
-        driver-side is correct while the filter is broadcast-sized."""
-        m = self.n_buckets
-        shard = _shard_of(h1, self.n_shards)
-        fp = _fp_of(h2)
-        i1 = _i1_of(h1, m)
-        rng = np.random.default_rng(m)
-        ok = True
-        for j in range(len(fp)):
-            s = int(shard[j])
-            if self.saturated[s]:
-                continue
-            if not _insert_one(self.shards[s], int(i1[j]), int(fp[j]), self.slots, rng):
-                self.saturated[s] = True
-                ok = False
-        self._invalidate_broadcast()
-        return ok
 
     def delete_hashes(self, h1: np.ndarray, h2: np.ndarray) -> int:
         """Remove fingerprints for keys KNOWN to have been inserted,
@@ -453,20 +319,9 @@ def antijoin_cuckoo(
     n_shards: int = 4,
     filt: CuckooSeenSet | None = None,
 ) -> DataFrame:
-    """Cuckoo prefilter + exact confirm. Result == antijoin_exact always
-    (definitely-new rows bypass the join; maybe-seen rows are confirmed).
-    Pass a prebuilt ``filt`` to reuse/delete-maintain the filter across
-    rounds instead of rebuilding from ``seen``."""
-    spark = candidates.sparkSession
+    """Cuckoo prefilter + exact confirm. Pass a prebuilt ``filt`` to
+    reuse/delete-maintain the filter across rounds instead of building
+    from ``seen``."""
     if filt is None:
         filt = CuckooSeenSet.build(seen, key, expected_items, n_shards=n_shards)
-    probe = filt.might_contain_udf(spark)
-    hashed = _hash_cols(candidates, key).withColumn(
-        "_maybe_seen", probe(F.col("_bh1"), F.col("_bh2"))
-    )
-    definitely_new = hashed.where(~F.col("_maybe_seen")).drop(
-        "_bh1", "_bh2", "_maybe_seen"
-    )
-    suspects = hashed.where(F.col("_maybe_seen")).drop("_bh1", "_bh2", "_maybe_seen")
-    confirmed_new = antijoin_exact(suspects, seen, key)
-    return definitely_new.unionByName(confirmed_new)
+    return antijoin_prefiltered(candidates, seen, key, filt)

@@ -1,9 +1,10 @@
-"""URL/key seen-set: exact anti-join with a Bloom-filter fast path.
+"""URL/key seen-set: exact anti-join with persistent prefilter tiers.
 
 The reference's only dedup is file-existence at the storage node
 (``/root/reference/src/storage/main.go:146-151``) — an RPC + stat() per
 key. Spark-first, membership is a relational anti-join; the north rule
-adds a Bloom prefilter for 10^10-frontier scale.
+adds a Bloom prefilter and then a partitioned cuckoo filter in front of
+it for 10^10-frontier scale.
 
 Design for scale (SURVEY.md §7 hard part b):
 
@@ -12,24 +13,31 @@ Design for scale (SURVEY.md §7 hard part b):
   ``antijoin_copartitioned`` which pins both sides to the same
   xxhash64-bucket partitioning so the join is a co-located sort-merge
   with no broadcast and no replan surprises.
-- **broadcast Bloom prefilter** (``BloomSeenSet``): k index bits derived
-  by double hashing from two JVM-computed ``xxhash64(key, seed)`` columns
+- **prefilter tiers** (``BloomSeenSet`` here, ``CuckooSeenSet`` in
+  operators/cuckoo.py, which adds the deletion ``purge_images`` needs):
+  index bits come from two JVM-computed ``xxhash64(key, seed)`` columns
   — build and probe share the exact same hash bits, and the expensive
   hashing stays in whole-stage codegen; Python only does vectorized
-  numpy bit tests on Arrow batches. Rows with any unset bit are
-  DEFINITELY new and skip the exact join; possible-positives are
-  confirmed exactly. Correctness is therefore independent of the FPP.
-- **sharding**: the filter is a list of shards keyed by ``h1 % shards``.
-  A single 10-bits/key filter at 10^10 keys is ~12 GB — too big to
-  broadcast; shards bound per-executor memory and are the stepping stone
-  to partitioned cuckoo filters (bucket-local build+probe with no
-  broadcast at all, which at top scale degenerates to
-  ``antijoin_copartitioned`` — already provided).
+  numpy tests on Arrow batches. Rows the filter misses are DEFINITELY
+  new and skip the exact join; possible-positives are confirmed exactly
+  (``antijoin_prefiltered``). Correctness is therefore independent of
+  the false-positive rate.
+- **one lifecycle** (``SeenFilter``): both tiers share the per-version
+  probe broadcast, the warehouse checkpoint with its images-commit
+  watermark, and the ``needs_rebuild`` predicate the engine's
+  persistent-filter maintenance keys on.
+- **sharding**: each filter is a list of shards keyed by the first
+  hash. A single 10-bits/key filter at 10^10 keys is ~12 GB — too big to
+  broadcast; shards bound per-executor memory, and at top scale the
+  shards become the partitions of ``antijoin_copartitioned``.
 """
 
 from __future__ import annotations
 
+import json
 import math
+import os
+import secrets
 from collections.abc import Iterator
 
 import numpy as np
@@ -48,7 +56,104 @@ def _hash_cols(df: DataFrame, key: str) -> DataFrame:
     )
 
 
-class BloomSeenSet:
+class SeenFilter:
+    """What the Bloom and cuckoo tiers share. A subclass holds its tables
+    in ``shards`` (first axis = shard) and supplies
+    ``_probe_arrays(h1, h2)``, ``insert_df(df, key)``, ``needs_rebuild``,
+    ``_payload()`` (the constructor arguments the probe needs, broadcast
+    once per filter version) and ``_checkpoint()`` /
+    ``_from_checkpoint(meta, arrays)`` (its json metadata and npz
+    arrays)."""
+
+    _bc = None  # cached probe broadcast (invalidated on mutation)
+    shards: np.ndarray
+
+    @property
+    def n_shards(self) -> int:
+        return self.shards.shape[0]
+
+    def _invalidate_broadcast(self) -> None:
+        if self._bc is not None:
+            try:
+                self._bc.destroy()
+            except Exception:
+                pass
+            self._bc = None
+
+    def _broadcast(self, spark):
+        """One broadcast per filter VERSION: reused across probe calls
+        and rounds until a mutation invalidates it — a fresh broadcast
+        per call leaks driver/executor memory over long crawls."""
+        if self._bc is None:
+            self._bc = spark.sparkContext.broadcast(self._payload())
+        return self._bc
+
+    def might_contain_udf(self, spark):
+        """Vectorized membership probe as a pandas UDF over (_bh1, _bh2)."""
+        bc = self._broadcast(spark)
+        cls = type(self)
+
+        @F.pandas_udf(BooleanType())
+        def probe(h1s: pd.Series, h2s: pd.Series) -> pd.Series:
+            filt = cls(*bc.value)
+            return pd.Series(
+                filt._probe_arrays(h1s.to_numpy(np.uint64), h2s.to_numpy(np.uint64))
+            )
+
+        return probe
+
+    # -- persistence (restart without the O(seen) rebuild) -----------------
+
+    def save(self, dirpath: str, watermark: int) -> None:
+        """Persist the filter under the warehouse with the catalog's
+        crash discipline: blob file first, then the ``current.json``
+        pointer via write-temp + atomic rename, then retire superseded
+        blobs. ``watermark`` records the images-table commit the filter
+        covers; ``load`` + an O(delta) ``insert_df`` of
+        ``read_since(watermark)`` resumes a restart without an O(seen)
+        rebuild."""
+        meta, arrays = self._checkpoint()
+        os.makedirs(dirpath, exist_ok=True)
+        token = secrets.token_hex(4)
+        blob = f"state-{token}.npz"
+        np.savez(os.path.join(dirpath, blob), **arrays)
+        tmp = os.path.join(dirpath, f".tmp-{token}")
+        with open(tmp, "w") as f:
+            json.dump({"file": blob, "watermark": watermark, **meta}, f)
+        os.rename(tmp, os.path.join(dirpath, "current.json"))  # POSIX-atomic
+        for fn in os.listdir(dirpath):
+            if fn.startswith("state-") and fn != blob:
+                try:
+                    os.remove(os.path.join(dirpath, fn))
+                except OSError:
+                    pass
+
+    @classmethod
+    def load(cls, dirpath: str):
+        """Reload a saved filter; returns (filter, watermark) or None if
+        nothing (readable) is persisted."""
+        try:
+            with open(os.path.join(dirpath, "current.json")) as f:
+                meta = json.load(f)
+            with np.load(os.path.join(dirpath, meta["file"])) as z:
+                arrays = {name: z[name].copy() for name in z.files}
+            filt = cls._from_checkpoint(meta, arrays)
+        except (OSError, KeyError, ValueError):
+            return None
+        return filt, int(meta["watermark"])
+
+
+def _bloom_bits(h1: np.ndarray, h2: np.ndarray, bits: int, k: int, n_shards: int):
+    """(shard, byte, bit) of each of the k index bits, by double hashing."""
+    shard = (h1 % np.uint64(n_shards)).astype(np.int64)
+    for i in range(k):
+        idx = (h1 + np.uint64(i) * h2) & np.uint64(bits - 1)
+        yield shard, (idx >> np.uint64(3)).astype(np.int64), (idx & np.uint64(7)).astype(
+            np.uint8
+        )
+
+
+class BloomSeenSet(SeenFilter):
     """Sharded Bloom filter built distributed, probed via broadcast.
 
     Designed as a PERSISTENT cross-round filter: build once with headroom
@@ -73,51 +178,6 @@ class BloomSeenSet:
         self.shards = shards  # (n_shards, bits/8) uint8
         self.capacity = capacity  # expected_items the bit count was sized for
         self.n_inserted = n_inserted  # keys hashed in (dup-counting upper bound)
-        self._bc = None  # cached probe broadcast (invalidated on mutation)
-
-    @property
-    def n_shards(self) -> int:
-        return self.shards.shape[0]
-
-    @staticmethod
-    def _or_pass(
-        df: DataFrame, key: str, bits: int, k: int, n_shards: int
-    ) -> tuple[np.ndarray, int]:
-        """One distributed pass over keys: per-partition partial bitmaps
-        (+ row counts), OR-reduced on the driver. Each partial is bits/8
-        bytes per shard — tiny vs the data."""
-        n_bytes = bits // 8
-        hashed = _hash_cols(df.select(key), key).select("_bh1", "_bh2")
-
-        def partial(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            buf = np.zeros((n_shards, n_bytes), dtype=np.uint8)
-            n = 0
-            for pdf in batches:
-                if not len(pdf):
-                    continue
-                n += len(pdf)
-                h1 = pdf["_bh1"].to_numpy(np.uint64)
-                h2 = pdf["_bh2"].to_numpy(np.uint64)
-                shard = (h1 % np.uint64(n_shards)).astype(np.int64)
-                for i in range(k):
-                    idx = (h1 + np.uint64(i) * h2) & np.uint64(bits - 1)
-                    byte_i = (idx >> np.uint64(3)).astype(np.int64)
-                    mask = np.left_shift(
-                        np.uint8(1), (idx & np.uint64(7)).astype(np.uint8)
-                    )
-                    np.bitwise_or.at(buf, (shard, byte_i), mask)
-            if n:
-                yield pd.DataFrame({"shard_blob": [buf.tobytes()], "n": [n]})
-
-        parts = hashed.mapInPandas(partial, "shard_blob binary, n long").collect()
-        acc = np.zeros((n_shards, n_bytes), dtype=np.uint8)
-        total = 0
-        for row in parts:
-            acc |= np.frombuffer(row["shard_blob"], dtype=np.uint8).reshape(
-                n_shards, n_bytes
-            )
-            total += row["n"]
-        return acc, total
 
     @staticmethod
     def build(
@@ -132,127 +192,76 @@ class BloomSeenSet:
         k = max(1, round(m_total / max(expected_items, 1) * math.log(2)))
         bits = min(max_bits_per_shard, -(-m_total // n_shards))
         bits = 1 << (bits - 1).bit_length()  # pow2 so % is a mask
-        acc, n = BloomSeenSet._or_pass(df, key, bits, k, n_shards)
-        return BloomSeenSet(bits, k, acc, capacity=expected_items, n_inserted=n)
+        filt = BloomSeenSet(
+            bits, k, np.zeros((n_shards, bits // 8), dtype=np.uint8), expected_items
+        )
+        filt.insert_df(df, key)
+        return filt
 
     def insert_df(self, df: DataFrame, key: str) -> None:
-        """OR in new keys (the cross-round maintenance path): a partial
-        bitmap built over ONLY the new keys with this filter's exact
-        (bits, k, shards) parameters, merged by bitwise OR. Distributed,
-        O(new keys), no per-key driver traffic."""
-        delta, n = BloomSeenSet._or_pass(
-            df, key, self.bits_per_shard, self.n_hashes, self.n_shards
-        )
-        self.shards |= delta
-        self.n_inserted += n
+        """OR in keys (build and the cross-round maintenance path): one
+        distributed pass builds a partial bitmap per partition with this
+        filter's exact (bits, k, shards) parameters; the driver merges
+        them by bitwise OR. O(keys), no per-key driver traffic."""
+        bits, k, n_shards = self.bits_per_shard, self.n_hashes, self.n_shards
+        n_bytes = bits // 8
+
+        def partial(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+            buf = np.zeros((n_shards, n_bytes), dtype=np.uint8)
+            n = 0
+            for pdf in batches:
+                n += len(pdf)
+                h1 = pdf["_bh1"].to_numpy(np.uint64)
+                h2 = pdf["_bh2"].to_numpy(np.uint64)
+                for shard, byte_i, bit in _bloom_bits(h1, h2, bits, k, n_shards):
+                    np.bitwise_or.at(buf, (shard, byte_i), np.left_shift(np.uint8(1), bit))
+            if n:
+                yield pd.DataFrame({"shard_blob": [buf.tobytes()], "n": [n]})
+
+        hashed = _hash_cols(df.select(key), key).select("_bh1", "_bh2")
+        for row in hashed.mapInPandas(partial, "shard_blob binary, n long").collect():
+            self.shards |= np.frombuffer(row["shard_blob"], dtype=np.uint8).reshape(
+                n_shards, n_bytes
+            )
+            self.n_inserted += row["n"]
         self._invalidate_broadcast()
 
     @property
-    def over_capacity(self) -> bool:
+    def needs_rebuild(self) -> bool:
         """Inserts exceeded the bit-count sizing — fpp is degrading and
         the owner should rebuild with more headroom. Correctness is never
         at stake (higher fpp only routes more rows to the exact join)."""
         return self.n_inserted > self.capacity
 
-    def _invalidate_broadcast(self) -> None:
-        if self._bc is not None:
-            try:
-                self._bc.destroy()
-            except Exception:
-                pass
-            self._bc = None
+    def _probe_arrays(self, h1: np.ndarray, h2: np.ndarray) -> np.ndarray:
+        hit = np.ones(len(h1), dtype=bool)
+        for shard, byte_i, bit in _bloom_bits(
+            h1, h2, self.bits_per_shard, self.n_hashes, self.n_shards
+        ):
+            hit &= (self.shards[shard, byte_i] >> bit) & 1 == 1
+        return hit
 
-    def _broadcast(self, spark):
-        """One broadcast per filter VERSION: reused across rounds until a
-        mutation invalidates it (a fresh broadcast per probe call leaks
-        driver/executor memory over long crawls)."""
-        if self._bc is None:
-            self._bc = spark.sparkContext.broadcast(
-                (self.bits_per_shard, self.n_hashes, self.shards)
-            )
-        return self._bc
+    def _payload(self) -> tuple:
+        return self.bits_per_shard, self.n_hashes, self.shards
 
-    # -- persistence (restart without the O(seen) rebuild) -----------------
-
-    def save(self, dirpath: str, watermark: int) -> None:
-        """Persist shard bitmaps + metadata under the warehouse — the
-        same crash discipline as the cuckoo checkpoint (blob file first,
-        then the ``current.json`` pointer via write-temp + atomic
-        rename). ``watermark`` records the images-table commit the
-        filter covers; ``load`` + an O(delta) ``insert_df`` of
-        ``read_since(watermark)`` resumes a restart without the O(seen)
-        rebuild the in-process-only filter used to pay."""
-        import json
-        import os
-        import secrets
-
-        os.makedirs(dirpath, exist_ok=True)
-        token = secrets.token_hex(4)
-        blob = f"state-{token}.npz"
-        np.savez(os.path.join(dirpath, blob), shards=self.shards)
+    def _checkpoint(self) -> tuple[dict, dict]:
         meta = {
-            "file": blob,
-            "watermark": watermark,
             "bits_per_shard": self.bits_per_shard,
             "n_hashes": self.n_hashes,
             "capacity": self.capacity,
             "n_inserted": self.n_inserted,
         }
-        tmp = os.path.join(dirpath, f".tmp-{token}")
-        with open(tmp, "w") as f:
-            json.dump(meta, f)
-        os.rename(tmp, os.path.join(dirpath, "current.json"))  # POSIX-atomic
-        for fn in os.listdir(dirpath):  # retire superseded blobs
-            if fn.startswith("state-") and fn != blob:
-                try:
-                    os.remove(os.path.join(dirpath, fn))
-                except OSError:
-                    pass
+        return meta, {"shards": self.shards}
 
-    @staticmethod
-    def load(dirpath: str) -> tuple["BloomSeenSet", int] | None:
-        """Reload a saved filter; returns (filter, watermark) or None if
-        nothing (readable) is persisted."""
-        import json
-        import os
-
-        try:
-            with open(os.path.join(dirpath, "current.json")) as f:
-                meta = json.load(f)
-            with np.load(os.path.join(dirpath, meta["file"])) as z:
-                shards = z["shards"].copy()
-            filt = BloomSeenSet(
-                meta["bits_per_shard"],
-                meta["n_hashes"],
-                shards,
-                capacity=meta["capacity"],
-                n_inserted=meta["n_inserted"],
-            )
-        except (OSError, KeyError, ValueError):
-            return None
-        return filt, int(meta["watermark"])
-
-    def might_contain_udf(self, spark):
-        """Vectorized membership probe as a pandas UDF over (_bh1, _bh2)."""
-        bc = self._broadcast(spark)
-
-        @F.pandas_udf(BooleanType())
-        def probe(h1s: pd.Series, h2s: pd.Series) -> pd.Series:
-            bits, k, shards = bc.value
-            n_shards = shards.shape[0]
-            h1 = h1s.to_numpy(np.uint64)
-            h2 = h2s.to_numpy(np.uint64)
-            shard = (h1 % np.uint64(n_shards)).astype(np.int64)
-            hit = np.ones(len(h1), dtype=bool)
-            for i in range(k):
-                idx = (h1 + np.uint64(i) * h2) & np.uint64(bits - 1)
-                byte_i = (idx >> np.uint64(3)).astype(np.int64)
-                bit = (idx & np.uint64(7)).astype(np.uint8)
-                got = shards[shard, byte_i]
-                hit &= (got >> bit) & 1 == 1
-            return pd.Series(hit)
-
-        return probe
+    @classmethod
+    def _from_checkpoint(cls, meta: dict, arrays: dict) -> "BloomSeenSet":
+        return cls(
+            meta["bits_per_shard"],
+            meta["n_hashes"],
+            arrays["shards"],
+            capacity=meta["capacity"],
+            n_inserted=meta["n_inserted"],
+        )
 
 
 def antijoin_exact(candidates: DataFrame, seen: DataFrame, key: str) -> DataFrame:
@@ -272,6 +281,22 @@ def antijoin_copartitioned(
     return c.join(s, key, "left_anti")
 
 
+def antijoin_prefiltered(
+    candidates: DataFrame, seen: DataFrame, key: str, filt: SeenFilter
+) -> DataFrame:
+    """Prefilter + exact confirm. Result == antijoin_exact always: rows
+    the filter misses are definitely new and skip the join; maybe-seen
+    rows are confirmed against ``seen``."""
+    probe = filt.might_contain_udf(candidates.sparkSession)
+    hashed = _hash_cols(candidates, key).withColumn(
+        "_maybe_seen", probe(F.col("_bh1"), F.col("_bh2"))
+    )
+    tmp = ("_bh1", "_bh2", "_maybe_seen")
+    definitely_new = hashed.where(~F.col("_maybe_seen")).drop(*tmp)
+    suspects = hashed.where(F.col("_maybe_seen")).drop(*tmp)
+    return definitely_new.unionByName(antijoin_exact(suspects, seen, key))
+
+
 def antijoin_bloom(
     candidates: DataFrame,
     seen: DataFrame,
@@ -281,19 +306,8 @@ def antijoin_bloom(
     n_shards: int = 4,
     filt: BloomSeenSet | None = None,
 ) -> DataFrame:
-    """Bloom prefilter + exact confirm. Result == antijoin_exact always;
-    the bloom only routes definitely-new rows around the join. Pass a
-    prebuilt ``filt`` to reuse the persistent cross-round filter instead
-    of rebuilding from ``seen``."""
-    spark = candidates.sparkSession
-    bloom = filt or BloomSeenSet.build(seen, key, expected_items, fpp, n_shards)
-    probe = bloom.might_contain_udf(spark)
-    hashed = _hash_cols(candidates, key).withColumn(
-        "_maybe_seen", probe(F.col("_bh1"), F.col("_bh2"))
-    )
-    definitely_new = hashed.where(~F.col("_maybe_seen")).drop(
-        "_bh1", "_bh2", "_maybe_seen"
-    )
-    suspects = hashed.where(F.col("_maybe_seen")).drop("_bh1", "_bh2", "_maybe_seen")
-    confirmed_new = antijoin_exact(suspects, seen, key)
-    return definitely_new.unionByName(confirmed_new)
+    """Bloom prefilter + exact confirm. Pass a prebuilt ``filt`` to reuse
+    the persistent cross-round filter instead of building from ``seen``."""
+    if filt is None:
+        filt = BloomSeenSet.build(seen, key, expected_items, fpp, n_shards)
+    return antijoin_prefiltered(candidates, seen, key, filt)
