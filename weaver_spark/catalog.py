@@ -48,6 +48,8 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
+from .session import local_df
+
 
 @runtime_checkable
 class TableBackend(Protocol):
@@ -360,7 +362,7 @@ class DeltaTable:
             if not m.get("tombstone"):
                 dirs.extend(m["files"])
         if not dirs:
-            return spark.createDataFrame([], schema)
+            return local_df(spark, [], schema)
         return spark.read.schema(schema).parquet(*dirs)
 
     def read_since(self, spark: SparkSession, after_cid: int) -> DataFrame:
@@ -373,7 +375,7 @@ class DeltaTable:
             if cid > after_cid and not m.get("tombstone"):
                 dirs.extend(m["files"])
         if not dirs:
-            return spark.createDataFrame([], self.schema)
+            return local_df(spark, [], self.schema)
         return spark.read.schema(self.schema).parquet(*dirs)
 
     def _tombstone_schema(self) -> StructType:
@@ -406,7 +408,7 @@ class DeltaTable:
         base = (
             spark.read.schema(self.schema).parquet(*base_dirs)
             if base_dirs
-            else spark.createDataFrame([], self.schema)
+            else local_df(spark, [], self.schema)
         )
         if not delta_dirs and not tomb_dirs:
             return base
@@ -451,7 +453,7 @@ class DeltaTable:
         deltas = (
             spark.read.schema(self.schema).parquet(*delta_dirs)
             if delta_dirs
-            else spark.createDataFrame([], self.schema)
+            else local_df(spark, [], self.schema)
         ).withColumn("_tomb", F.lit(False))
         if tomb_dirs:
             tombs = spark.read.schema(self._tombstone_schema()).parquet(
@@ -521,7 +523,7 @@ class DeltaTable:
             key_rows = (
                 spark.read.schema(self.schema).parquet(*delta_dirs).select(self.key)
                 if delta_dirs
-                else spark.createDataFrame([], self.schema).select(self.key)
+                else local_df(spark, [], self.schema).select(self.key)
             )
             if tomb_dirs:
                 key_rows = key_rows.unionByName(
@@ -539,7 +541,7 @@ class DeltaTable:
             base_touched = (
                 spark.read.schema(self.schema).parquet(*base_touched_dirs)
                 if base_touched_dirs
-                else spark.createDataFrame([], self.schema)
+                else local_df(spark, [], self.schema)
             )
             state = self._merge_state(
                 spark, base_touched, delta_dirs, tomb_dirs, has_base=True

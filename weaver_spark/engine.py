@@ -81,12 +81,8 @@ from .schemas import (
     URL_TYPE_ROOT,
     WEB_PAGES_SCHEMA,
 )
+from .session import local_df
 from .webgen import SyntheticWeb
-
-
-@F.pandas_udf(StringType())
-def _canonicalize_udf(urls: pd.Series) -> pd.Series:
-    return canonicalize_series(urls)
 
 
 @F.pandas_udf(StringType())
@@ -113,6 +109,23 @@ def _priority_expr(kind_col, depth_col=None, mode: str = "kind"):
             F.lit(0), F.lit(DEPTH_PRIORITY_CEIL) - depth_col
         ).cast("int")
     return F.when(kind_col == URL_TYPE_ROOT, F.lit(1)).otherwise(F.lit(0))
+
+
+FETCH_ROWS_PER_TASK = 256
+
+
+def _fetch_partitions(n_rows: int, shuffle_partitions: int) -> int:
+    """Fetch-stage task count for a batch of at most ``n_rows`` rows:
+    one task per ``FETCH_ROWS_PER_TASK`` rows, at least one wave
+    (``shuffle_partitions``) and at most four. Four waves of short tasks
+    let the scheduler re-balance a big batch around stragglers (a skewed
+    bucket, a stolen CPU slice), where one task per core would idle that
+    core to the end. A small batch gets one wave: every Python-worker task
+    pays a fixed start-up (about 0.27 s in pyspark 4.1, dominated by
+    re-reading the pyspark zip), which four waves of ~20-URL tasks pay
+    for nothing."""
+    p = shuffle_partitions
+    return min(4 * p, max(p, -(-n_rows // FETCH_ROWS_PER_TASK)))
 
 
 def _seq_bounds(grp_rows) -> tuple[int, int] | None:
@@ -247,8 +260,7 @@ class CrawlEngine:
         if web.seed != self.seed:
             self.seed = web.seed
             self._fetch_fn = make_synthetic_fetch_fn(self.k_cap, web.seed)
-        df = self.spark.createDataFrame(web.page_rows(), WEB_PAGES_SCHEMA)
-        self.set_web_df(df)
+        self.set_web_df(local_df(self.spark, web.page_rows(), WEB_PAGES_SCHEMA))
 
     def set_web_df(self, df: DataFrame) -> None:
         self.web_pages = df.persist()
@@ -315,7 +327,7 @@ class CrawlEngine:
                 tuple(r) + (None,) * (len(ROBOTS_SCHEMA) - len(r))
                 for r in rows_or_df
             ]
-            self.robots_df = self.spark.createDataFrame(rows, ROBOTS_SCHEMA)
+            self.robots_df = local_df(self.spark, rows, ROBOTS_SCHEMA)
 
     def enable_auto_robots(self, **fetch_kwargs) -> None:
         """Live robots.txt caching (scale mode): at the start of each
@@ -401,9 +413,7 @@ class CrawlEngine:
             # would double every pending row for that host through the
             # enforcement join, durably. One tiny job over the CANDIDATE
             # hosts only — not the cache.
-            cand = self.spark.createDataFrame(
-                [(h,) for h, _ in new], "host string"
-            )
+            cand = local_df(self.spark, [(h,) for h, _ in new], "host string")
             cached_hosts = {
                 r["host"]
                 for r in cand.join(
@@ -449,8 +459,8 @@ class CrawlEngine:
             (u, start + i, url_types[i] if url_types else None)
             for i, u in enumerate(canon)
         ]
-        df = self.spark.createDataFrame(
-            rows, "url string, enqueue_seq long, seed_type string"
+        df = local_df(
+            self.spark, rows, "url string, enqueue_seq long, seed_type string"
         )
         kinds = self.web_pages.select("url", "kind") if self.web_pages is not None else None
         if kinds is not None:
@@ -523,7 +533,7 @@ class CrawlEngine:
         sel = latest.select(F.col("image_id").alias("url"), "_etag", "_last_modified")
         if urls is not None:
             canon = list(canonicalize_series(pd.Series(urls)))
-            want = spark.createDataFrame([(u,) for u in canon], "url string")
+            want = local_df(spark, [(u,) for u in canon], "url string")
             sel = sel.join(F.broadcast(want), "url", "left_semi")
         conds = sel.persist()
         targets = [r["url"] for r in conds.select("url").collect()]
@@ -565,7 +575,7 @@ class CrawlEngine:
             F.col("sitemaps").isNotNull() & (F.size("sitemaps") > 0)
         ).select("host", F.explode("sitemaps").alias("sitemap"))
         if hosts is not None:
-            want = self.spark.createDataFrame([(h,) for h in hosts], "host string")
+            want = local_df(self.spark, [(h,) for h in hosts], "host string")
             sm = sm.join(F.broadcast(want), "host", "left_semi")
         if distributed:
             pages = [
@@ -580,9 +590,7 @@ class CrawlEngine:
         if not pages:
             return 0
         canon = list(dict.fromkeys(canonicalize_series(pd.Series(pages))))
-        cand = self.spark.createDataFrame(
-            list(enumerate(canon)), "idx long, url string"
-        )
+        cand = local_df(self.spark, list(enumerate(canon)), "idx long, url string")
         if self.frontier.last_commit():
             cand = cand.join(
                 self.frontier.read(self.spark).select("url"), "url", "left_anti"
@@ -614,7 +622,7 @@ class CrawlEngine:
         # purged keys fetch unconditionally (their validators died with
         # the purged generation)
         if self._recrawl_conds is not None:
-            dead = self.spark.createDataFrame([(u,) for u in stale], "url string")
+            dead = local_df(self.spark, [(u,) for u in stale], "url string")
             self._recrawl_conds = self._recrawl_conds.join(
                 F.broadcast(dead), "url", "left_anti"
             )
@@ -747,9 +755,7 @@ class CrawlEngine:
             meta={"op": "purge", "round": self.current_round(), "n": len(image_ids)},
         )
         if isinstance(self._filter, CuckooSeenSet):
-            keys_df = self.spark.createDataFrame(
-                [(k,) for k in image_ids], "image_id string"
-            )
+            keys_df = local_df(self.spark, [(k,) for k in image_ids], "image_id string")
             self._filter.delete_hashes(
                 *spark_key_hasher(self.spark, keys_df, "image_id")
             )
@@ -829,7 +835,7 @@ class CrawlEngine:
         if not any(files for _cid, files, _m in self.images.live_commits()):
             # no live commit owns any data dir (never-written table, OR a
             # previous vacuum already emptied every dir): the read comes
-            # from createDataFrame (no file-source relation), where
+            # from a local relation (no file-source relation), where
             # _metadata does not exist — nothing to vacuum
             return 0
         rows = self.images.read(
@@ -1238,13 +1244,15 @@ class CrawlEngine:
         # explicit numPartitions repartition is exempt from AQE
         # coalescing. Keys: (host, salt(url)) spreads mega-hosts across
         # tasks while keeping per-host locality for connection reuse.
-        # 4x oversubscription: one task per core makes the stage's
-        # makespan the max over N core-long tasks — any straggler (skewed
-        # bucket, stolen CPU slice) idles its whole core to the end. 4
-        # waves of short tasks let the scheduler re-balance; per-task
-        # python-worker/arrow setup is milliseconds against multi-second
-        # tasks.
-        n_fetch_parts = 4 * int(spark.conf.get("spark.sql.shuffle.partitions"))
+        # Task count (_fetch_partitions): 4x oversubscription only for a
+        # big batch; a small one gets one wave, because every Python-
+        # worker task pays ~0.27 s of start-up before its first URL. The
+        # pending count less the blocked rows bounds the batch, and both
+        # are driver-side already (no job).
+        n_fetch_parts = _fetch_partitions(
+            n_pending - n_blocked,
+            int(spark.conf.get("spark.sql.shuffle.partitions")),
+        )
         salt = F.pmod(F.xxhash64("url"), F.lit(self.salt_buckets))
         if DELAY_MS_COL in fetch_input.columns:
             # crawl-delayed hosts get a CONSTANT salt: all of a delayed
@@ -1287,7 +1295,7 @@ class CrawlEngine:
 
         def _read_results(dirs: list[str]) -> DataFrame:
             if not dirs:
-                return spark.createDataFrame([], FETCH_RESULT_SCHEMA)
+                return local_df(spark, [], FETCH_RESULT_SCHEMA)
             df = spark.read.schema(FETCH_RESULT_SCHEMA).parquet(*dirs)
             if self.max_depth is not None:
                 # depth guard: a page AT the cap is fetched, its links
@@ -1490,8 +1498,8 @@ class CrawlEngine:
                     F.posexplode("links").alias("link_pos", "raw_url"),
                 )
                 if pages is not None:
-                    # synthetic webs emit absolute spellings
-                    links = links.withColumn("url", _canonicalize_udf(F.col("raw_url")))
+                    # the synthetic fetch fn emits canonical links
+                    links = links.withColumnRenamed("raw_url", "url")
                     typed = links.join(pages.select("url", "kind"), "url", "left")
                 else:
                     # http mode: hrefs may be relative — resolve vs parent;
@@ -1508,12 +1516,14 @@ class CrawlEngine:
                 ).withColumn("attempt", F.lit(0))
             if retry_rows is not None:
                 typed = retry_rows if typed is None else typed.unionByName(retry_rows)
-            # pin the links pipeline ONCE: dense_seq's range repartition
-            # executes its input twice (boundary sampling + the shuffle
-            # write), and this input carries the canonicalize pandas UDF
-            # — without the pin the UDF pass runs 2x per round (measured
-            # 24% of deep-crawl wall in dense_seq, BENCH/deep_stage_
-            # marks.txt). O(round links) memory, same order as seq_pin.
+            # pin the links pipeline ONCE: dense_seq_numeric executes its
+            # input twice (the per-bucket count job, then the frontier
+            # write). In HTTP mode that input carries the resolve pandas
+            # UDF, which the pin keeps to one pass per round. Synthetic
+            # links need no UDF: in a traced crawl_deep round (seeds 1-3)
+            # the round wall was the same with and without the pin, and
+            # the pin saved 16 of the round's 192 tasks. O(round links)
+            # memory.
             typed = typed.persist()
             # numeric-lead variant (r7): deterministic buckets, no
             # boundary-sampling pass, no pinned intermediate — seqs

@@ -32,6 +32,8 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
+from .session import local_df
+
 _META_PREFIX = "weaver."  # snapshot summary namespace for engine meta
 
 
@@ -194,8 +196,7 @@ class IcebergTable:
         return self.last_commit()
 
     def append_rows(self, rows: list[tuple], meta: dict | None = None) -> int:
-        df = self.spark.createDataFrame(rows, self.schema)
-        return self.append(df, meta=meta)
+        return self.append(local_df(self.spark, rows, self.schema), meta=meta)
 
     def adopt(self, src_dir: str, meta: dict | None = None) -> int:
         # metadata-only file adoption — the fetch stage's payload bytes
@@ -267,7 +268,7 @@ class IcebergTable:
         # incremental append scan between snapshots
         snaps = self._snapshots()
         if not snaps or after_cid >= snaps[-1][0]:
-            return spark.createDataFrame([], self.schema)
+            return local_df(spark, [], self.schema)
         start = None
         for seq, sid, _ in snaps:
             if seq <= after_cid:

@@ -19,7 +19,9 @@ Two fetchers:
   (FIXTURES.md §3). Page content (links/image_id/caption/fmt) arrives as
   joined columns; pixels are generated deterministically from image_id on
   the executor and round-tripped through the codec — the decode work is
-  real, only the network is simulated.
+  real, only the network is simulated. Links are emitted canonical
+  (``canonicalize_series`` once per batch), so the engine's links pass
+  runs no Python.
 - ``http_fetch_fn``: a real urllib-based batch fetcher with the
   reference's 5x exponential backoff. Not exercised by tests (the sandbox
   has no network) but shows the production shape: same signature, same
@@ -96,6 +98,8 @@ def make_synthetic_fetch_fn(k_cap: int | None, seed: int = 42):
                 stores = pdf["_store"].eq(True).to_numpy(dtype=bool)
             else:
                 stores = np.ones(n, dtype=bool)
+            root_rows: list[tuple[int, int]] = []  # (row, its link count)
+            raw_links: list[str] = []
             for i in range(n):
                 t0 = time.perf_counter()
                 kind = kinds[i]
@@ -103,7 +107,8 @@ def make_synthetic_fetch_fn(k_cap: int | None, seed: int = 42):
                     links = list(links_col[i]) if links_col[i] is not None else []
                     if k_cap is not None:
                         links = links[:k_cap]
-                    out["links"][i] = links
+                    root_rows.append((i, len(links)))
+                    raw_links.extend(links)
                 elif kind == "leaf":
                     iid = image_ids[i]
                     out["image_id"][i] = iid
@@ -119,6 +124,13 @@ def make_synthetic_fetch_fn(k_cap: int | None, seed: int = 42):
                         out["sink"][i] = "p"
                 # kind None (404) / "dummy": nothing extracted
                 out["fetch_ms"][i] = int((time.perf_counter() - t0) * 1000)
+            # links leave canonical: one vectorized pass over the batch's
+            # links, in link_pos order (the enqueue-time canonicalizer)
+            canon = canonicalize_series(pd.Series(raw_links, dtype=object)).tolist()
+            pos = 0
+            for i, k in root_rows:
+                out["links"][i] = canon[pos : pos + k]
+                pos += k
             res = pd.DataFrame(out)
             res["w"] = res["w"].astype("Int32")
             res["h"] = res["h"].astype("Int32")

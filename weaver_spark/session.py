@@ -8,6 +8,10 @@ chosen for how it behaves on a real multi-executor cluster at 100 TB:
   is first handled by explicit salting, AQE is the backstop.
 - Arrow on: every Python-side stage in this engine is a pandas/Arrow UDF
   (``mapInPandas`` fetch/decode); row-at-a-time Python is banned.
+  Driver-side rows enter Spark through ``local_df`` (a ``pyarrow.Table``
+  -> ``LocalTableScan``), never through ``createDataFrame(list)``, whose
+  ``Scan ExistingRDD`` launches Python worker tasks on every scan; an
+  empty table read then needs no job.
 - shuffle.partitions ~ cores locally; on a cluster this is set per job to
   ~2-3x total executor cores (or left to AQE's coalescing with a high
   initial value).
@@ -19,7 +23,8 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import DataType, StructType
 
 
 def get_spark(
@@ -122,3 +127,30 @@ def get_spark(
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
+
+
+def local_df(
+    spark: SparkSession, rows: list[tuple], schema: StructType | str
+) -> DataFrame:
+    """A DataFrame of driver-side ``rows`` (tuples in ``schema`` order;
+    a StructType or a DDL string) planned as a ``LocalTableScan``: the
+    rows travel as one ``pyarrow.Table``, so scanning the result runs no
+    Python worker; an empty one collects without a job, and Catalyst
+    prunes it from joins. Unlike pandas input, a ``pa.Table`` has no
+    silent fallback to a Python RDD."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    if isinstance(schema, str):
+        schema = DataType.fromDDL(schema)
+    arrow_schema = to_arrow_schema(schema)
+    if any(len(r) != len(arrow_schema) for r in rows):
+        raise ValueError(f"rows must have {len(arrow_schema)} fields")
+    cols = list(zip(*rows)) if rows else [()] * len(arrow_schema)
+    arrays = [pa.array(list(c), type=f.type) for c, f in zip(cols, arrow_schema)]
+    for f, a in zip(arrow_schema, arrays):
+        # Arrow does not enforce nullability, and Spark trusts the schema
+        if not f.nullable and a.null_count:
+            raise ValueError(f"null in non-nullable column {f.name!r}")
+    table = pa.Table.from_arrays(arrays, schema=arrow_schema)
+    return spark.createDataFrame(table, schema)

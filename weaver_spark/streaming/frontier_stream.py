@@ -24,11 +24,18 @@ from __future__ import annotations
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StringType
 
-from ..engine import CrawlEngine, _canonicalize_udf
+from ..engine import CrawlEngine
+from ..functions.urls import canonicalize_series
 from ..schemas import STATUS_PENDING
 
 ENQUEUE_SCHEMA = "url STRING, url_type STRING, priority INT, ts TIMESTAMP"
+
+
+@F.pandas_udf(StringType())
+def _canonicalize_udf(urls: pd.Series) -> pd.Series:
+    return canonicalize_series(urls)
 
 
 def read_enqueue_stream(spark: SparkSession, drop_dir: str) -> DataFrame:
