@@ -32,12 +32,14 @@ Iceberg mapping per test (the behavior each one pins):
 """
 
 import os
+from datetime import datetime
 
 import pytest
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StringType, StructField, StructType
 
 from weaver_spark.catalog import DeltaTable, TableBackend
+from weaver_spark.schemas import LINEAGE_SCHEMA, METRICS_SCHEMA
 
 SCHEMA = StructType(
     [
@@ -77,10 +79,10 @@ BACKENDS = {
 def make_table(request, tmp_path):
     counter = [0]
 
-    def _make(key="k"):
+    def _make(key="k", schema=SCHEMA):
         counter[0] += 1
         return BACKENDS[request.param](
-            str(tmp_path / f"t{counter[0]}"), SCHEMA, key
+            str(tmp_path / f"t{counter[0]}"), schema, key
         )
 
     return _make
@@ -129,6 +131,34 @@ def test_append_rows_equivalent(spark, make_table):
     got = {(r["k"], r["val"]) for r in t.read(spark).collect()}
     assert got == {("a", 1), ("b", 2)}
     assert t.find_commit(op="tiny") == 1
+
+
+def test_append_rows_rejects_null_in_non_nullable(spark, make_table):
+    t = make_table()
+    with pytest.raises(ValueError, match="'val'"):
+        t.append_rows([("a", None, 1)])
+    with pytest.raises(ValueError, match="3 fields"):
+        t.append_rows([("a", 1)])
+    assert t.last_commit() == 0  # nothing committed
+
+
+def test_append_rows_lineage_and_metrics_read_back(spark, make_table):
+    """The engine's driver-side bookkeeping tables read back exactly the
+    rows appended: values, types and the table schema."""
+    at = datetime(2026, 1, 2, 3, 4, 5, 678901)
+    cases = [
+        (LINEAGE_SCHEMA, [(0, "metrics", 2, at), (0, "frontier", 3, at)]),
+        (METRICS_SCHEMA, [(1, 0, "h0.test", 5, 2, 1, 12345, 40)]),
+    ]
+    for schema, rows in cases:
+        t = make_table(key=None, schema=schema)
+        t.append_rows(rows, meta={"round": rows[0][0]})
+        got = t.read(spark)
+        # a file scan reads every column nullable; names and types hold
+        assert [(f.name, f.dataType) for f in got.schema] == [
+            (f.name, f.dataType) for f in schema
+        ]
+        assert sorted(tuple(r) for r in got.collect()) == sorted(rows)
 
 
 def test_adopt_is_metadata_only(spark, make_table, tmp_path):

@@ -9,6 +9,7 @@ from weaver_spark.operators.ranking import (
     dense_seq,
     dense_seq_numeric,
     fifo_order,
+    seq_bucket,
     topk_per_group,
 )
 
@@ -104,15 +105,20 @@ def test_dense_seq_numeric_conservative_bounds(spark):
     }
     lo, hi = 200, (112 * 5 + 200)
     for bounds in ((lo, hi), (0, 10 * hi), (lo - 1, hi + 999_999)):
-        out, pin = dense_seq_numeric(
-            df, ["parent_seq", "link_pos"], start=3, bounds=bounds
-        )
-        assert pin is None
-        got = {
-            (r["parent_seq"], r["link_pos"]): r["enqueue_seq"]
-            for r in out.collect()
-        }
-        assert got == expected, f"bounds={bounds}"
+        # counts=: per-bucket row counts the caller took in a job of its
+        # own (the engine's stats rollup), bucketed by seq_bucket
+        bkt = seq_bucket("parent_seq", bounds, 4).alias("b")
+        counts = {r["b"]: r["count"] for r in df.groupBy(bkt).count().collect()}
+        for kw in ({}, {"num_partitions": 4, "counts": counts}):
+            out, pin = dense_seq_numeric(
+                df, ["parent_seq", "link_pos"], start=3, bounds=bounds, **kw
+            )
+            assert pin is None
+            got = {
+                (r["parent_seq"], r["link_pos"]): r["enqueue_seq"]
+                for r in out.collect()
+            }
+            assert got == expected, f"bounds={bounds} {sorted(kw)}"
 
 
 def test_topk_and_fifo(spark):

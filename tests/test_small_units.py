@@ -6,25 +6,19 @@ import sys
 
 import pyarrow.parquet as pq
 
-from weaver_spark.engine import _seq_bounds
+from weaver_spark.engine import _seq_range
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
-def _g(mn, mx):
-    return {"mn_seq": mn, "mx_seq": mx}
+def test_seq_range_of_observed_row():
+    assert _seq_range({"lo": 2, "hi": 12}) == (2, 12)
+    assert _seq_range({"lo": 7, "hi": 7}) == (7, 7)
 
 
-def test_seq_bounds_spans_groups():
-    assert _seq_bounds([_g(5, 9), _g(2, 4), _g(7, 12)]) == (2, 12)
-
-
-def test_seq_bounds_empty_or_null_is_none():
-    assert _seq_bounds([]) is None
-    # a group whose rows all carry a null seq: no bound, no TypeError
-    assert _seq_bounds([_g(5, 9), _g(None, None)]) is None
-    assert _seq_bounds([_g(None, 3)]) is None
-    assert _seq_bounds([_g(3, None)]) is None
+def test_seq_range_empty_batch_is_none():
+    # min/max over no rows observe as null: no bounds, no TypeError
+    assert _seq_range({"lo": None, "hi": None}) is None
 
 
 def test_make_sf_measure_import_reads_no_parquet(monkeypatch):

@@ -44,11 +44,11 @@ import secrets
 import shutil
 from typing import Protocol, runtime_checkable
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
-from .session import local_df
+from .session import arrow_table, local_df
 
 
 @runtime_checkable
@@ -127,6 +127,7 @@ class TableBackend(Protocol):
         spark: SparkSession,
         meta: dict | None = None,
         buckets: int | None = None,
+        observe: list[Column] | None = None,
     ) -> int: ...
 
 
@@ -232,32 +233,12 @@ class DeltaTable:
         itself records snapshot metadata: tiny bookkeeping writes are a
         driver/catalog responsibility, not a distributed job — launching
         a Spark stage to write 3 rows costs ~1 s of fixed scheduler
-        latency per round, a pure serial term in the scaling ratio."""
-        import pyarrow as pa
+        latency per round, a pure serial term in the scaling ratio. The rows
+        go through ``session.arrow_table``, the same typed, width- and
+        null-checked conversion as ``local_df``."""
         import pyarrow.parquet as pq
 
-        _pa_types = {
-            "integer": pa.int32(),
-            "long": pa.int64(),
-            "string": pa.string(),
-            "double": pa.float64(),
-            "boolean": pa.bool_(),
-            "timestamp": pa.timestamp("us"),
-        }
-
-        def _pa_type(dt):
-            if dt.typeName() == "array":
-                return pa.list_(_pa_type(dt.elementType))
-            return _pa_types[dt.typeName()]
-
-        fields = [
-            pa.field(f.name, _pa_type(f.dataType)) for f in self.schema.fields
-        ]
-        cols = list(zip(*rows)) if rows else [[] for _ in fields]
-        table = pa.table(
-            {f.name: pa.array(list(c), type=f.type) for f, c in zip(fields, cols)},
-            schema=pa.schema(fields),
-        )
+        table = arrow_table(rows, self.schema)
         cid = self.last_commit() + 1
         token = secrets.token_hex(4)
         data_dir = os.path.join(self.root, "data", f"c{cid:08d}-{token}")
@@ -477,6 +458,7 @@ class DeltaTable:
         spark: SparkSession,
         meta: dict | None = None,
         buckets: int | None = None,
+        observe: list[Column] | None = None,
     ) -> int:
         """Fold the log into a single base commit (+vacuum).
 
@@ -488,16 +470,26 @@ class DeltaTable:
         steady-state compaction cost scales with the round's write set,
         not with frontier size — the difference between an O(batch) and
         an O(10^10) maintenance job. ``buckets=None`` keeps the plain
-        single-dir rewrite."""
+        single-dir rewrite.
+
+        ``observe``: named aggregates over the table's current rows,
+        computed by the rewrite itself (``DataFrame.observe`` — no extra
+        job) and recorded on the new base commit's meta under
+        ``observed``. Only a pass that writes the whole state records
+        them (the plain rewrite, a bucketed first layout); an incremental
+        bucket rewrite sees the touched buckets only and records none.
+
+        The rewrite reads the old commits' files while it writes; they
+        are retired only after the new base has committed, so nothing is
+        materialized first."""
+        cid = self.last_commit() + 1
+        token = secrets.token_hex(4)
+        data_dir = os.path.join(self.root, "data", f"c{cid:08d}-{token}")
         if buckets is None:
-            state = self.latest_state(spark).cache()
-            state.count()  # materialize before we drop the inputs
-            cid = self.append(state, meta={"compaction": True, **(meta or {})})
-            for old in self.commits():
-                if old != cid:
-                    os.remove(os.path.join(self._manifest_dir(), f"{old:08d}.json"))
-            state.unpersist()
-            self.vacuum()
+            state, obs = _observed(self.latest_state(spark), observe)
+            state.write.mode("overwrite").parquet(data_dir)
+            meta = {"compaction": True, **(meta or {})}
+            self._commit_base(cid, [data_dir], meta, obs)
             return cid
 
         assert self.key is not None, "bucketed compaction needs a keyed table"
@@ -512,10 +504,6 @@ class DeltaTable:
             # no-op, not an O(table) rewrite of every bucket
             return base_cid
         incremental = compatible_base and (delta_dirs or tomb_dirs)
-
-        cid = self.last_commit() + 1
-        token = secrets.token_hex(4)
-        data_dir = os.path.join(self.root, "data", f"c{cid:08d}-{token}")
 
         if incremental:
             # buckets touched by the write set since the last base — the
@@ -549,9 +537,9 @@ class DeltaTable:
             new_dirs = {
                 b: d for b, d in prior_dirs.items() if int(b) not in set(touched)
             }
+            obs = None
         else:
-            state = self.latest_state(spark)
-            touched = None  # full layout pass
+            state, obs = _observed(self.latest_state(spark), observe)
             new_dirs = {}
 
         state.withColumn("bucket", bucket_expr).repartition(
@@ -567,14 +555,32 @@ class DeltaTable:
             "bucket_dirs": new_dirs,
             **(meta or {}),
         }
-        self._write_manifest(
-            cid, {"files": sorted(new_dirs.values()), "meta": manifest_meta}
-        )
+        self._commit_base(cid, sorted(new_dirs.values()), manifest_meta, obs)
+        return cid
+
+    def _commit_base(
+        self, cid: int, files: list[str], meta: dict, obs: Observation | None
+    ) -> None:
+        """Commit a written compaction base, with the rewrite's observed
+        row if it carried one, then retire every older commit and the
+        data no manifest references any more."""
+        if obs is not None:
+            meta = {**meta, "observed": obs.get}
+        self._write_manifest(cid, {"files": files, "meta": meta})
         for old in self.commits():
             if old != cid:
                 os.remove(os.path.join(self._manifest_dir(), f"{old:08d}.json"))
         self.vacuum()
-        return cid
+
+
+def _observed(
+    df: DataFrame, aggs: list[Column] | None
+) -> tuple[DataFrame, Observation | None]:
+    """``df`` carrying an ``Observation`` of ``aggs`` (None: no aggs)."""
+    if not aggs:
+        return df, None
+    obs = Observation()
+    return df.observe(obs, *aggs), obs
 
 
 class Catalog:

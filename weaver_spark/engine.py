@@ -28,8 +28,9 @@ by default, bloom or cuckoo) is independent of the mode.
 
 Scale notes (10^10 frontier, 1000 executors):
 - No stage in the loop collects data: the only driver-side values are
-  per-partition counts (dense_seq offsets), a handful of scalars
-  (pending count, max seq) and prefilter shard blobs.
+  per-bucket link counts (dense_seq offsets, from the stats rollup), a
+  handful of scalars (pending count, max seq, observed by the jobs the
+  round runs anyway) and prefilter shard blobs.
 - The frontier is never rewritten: status changes are O(batch) delta
   appends; `DeltaTable.compact` folds the log between crawls.
 - The fetch stage repartitions by (host, salt) so one mega-host cannot
@@ -47,7 +48,7 @@ import time
 from datetime import datetime, timezone
 
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StringType
 
@@ -55,7 +56,12 @@ from .catalog import Catalog, TableBackend
 from .functions.urls import canonicalize_series, resolve_series
 from .operators.cuckoo import CuckooSeenSet, spark_key_hasher
 from .operators.fetch import make_synthetic_fetch_fn
-from .operators.ranking import budget_rank, dense_seq_numeric, topk_per_group
+from .operators.ranking import (
+    budget_rank,
+    dense_seq_numeric,
+    seq_bucket,
+    topk_per_group,
+)
 from .operators.robots import DELAY_CAP_COL, DELAY_MS_COL, apply_robots
 from .operators.seen import (
     BloomSeenSet,
@@ -115,8 +121,10 @@ FETCH_ROWS_PER_TASK = 256
 
 
 def _fetch_partitions(n_rows: int, shuffle_partitions: int) -> int:
-    """Fetch-stage task count for a batch of at most ``n_rows`` rows:
-    one task per ``FETCH_ROWS_PER_TASK`` rows, at least one wave
+    """Fetch-stage task count for a batch of at most ``n_rows`` rows (the
+    engine passes the round's pending count, a driver-side upper bound:
+    robots and the host budget only shrink the batch): one task per
+    ``FETCH_ROWS_PER_TASK`` rows, at least one wave
     (``shuffle_partitions``) and at most four. Four waves of short tasks
     let the scheduler re-balance a big batch around stragglers (a skewed
     bucket, a stolen CPU slice), where one task per core would idle that
@@ -128,16 +136,24 @@ def _fetch_partitions(n_rows: int, shuffle_partitions: int) -> int:
     return min(4 * p, max(p, -(-n_rows // FETCH_ROWS_PER_TASK)))
 
 
-def _seq_bounds(grp_rows) -> tuple[int, int] | None:
-    """(min, max) enqueue_seq over the round's rollup rows, or None —
-    dense_seq_numeric then computes its own bounds — when there are no
-    rows or any group's bound is null (min()/max() over a None would
-    raise TypeError mid-round)."""
-    lo = [r["mn_seq"] for r in grp_rows]
-    hi = [r["mx_seq"] for r in grp_rows]
-    if not lo or None in lo or None in hi:
+def _seq_range(observed: dict) -> tuple[int, int] | None:
+    """(lo, hi) of an observed min/max enqueue_seq row, or None for an
+    empty batch (both null): no rows, so nothing to sequence."""
+    if observed["lo"] is None:
         return None
-    return min(lo), max(hi)
+    return observed["lo"], observed["hi"]
+
+
+def _head_aggs() -> list:
+    """The frontier head scalars over the current state: pending count
+    and max enqueue_seq. One definition for the head aggregate and for
+    the observation a compaction's rewrite carries."""
+    return [
+        F.sum(F.when(F.col("status") == STATUS_PENDING, 1).otherwise(0)).alias(
+            "n_pending"
+        ),
+        F.max("enqueue_seq").alias("max_seq"),
+    ]
 
 
 class CrawlEngine:
@@ -230,14 +246,17 @@ class CrawlEngine:
         self.round_time_budget_ms = round_time_budget_ms
         self._fetch_fn = make_synthetic_fetch_fn(k_cap, seed)
         self._next_round: int | None = None  # cached current_round()
-        # (frontier_commit_id, n_pending, max_seq) carried across rounds:
-        # valid only while the frontier's last commit is the one this
-        # engine wrote — any external append/compact/rollback falls back
-        # to the exact aggregate. Purpose: the round's head aggregate is
-        # a driver-side scalar job over the whole frontier state; its
-        # ~1-5 s is a fixed serial term per round that the N-vs-4N
-        # scaling ratio pays at BOTH cluster sizes (BENCH/BASELINE.md).
-        self._carry: tuple[int, int, int] | None = None
+        # (frontier_commit_id, n_pending, max_seq, exact_round) carried
+        # across rounds: valid only while the frontier's last commit is
+        # the one this engine wrote — any external append/compact/
+        # rollback falls back to the exact aggregate. exact_round is the
+        # round at whose start the scalars were last known exactly (the
+        # head aggregate, or a compaction's observed row). Purpose: the
+        # round's head aggregate is a driver-side scalar job over the
+        # whole frontier state; its ~1-5 s is a fixed serial term per
+        # round that the N-vs-4N scaling ratio pays at BOTH cluster
+        # sizes (BENCH/BASELINE.md).
+        self._carry: tuple[int, int, int, int] | None = None
         self.keep_stage = keep_stage
         # WEAVER_TIMING=1 stage marks accumulate here; bench.py commits
         # them as BENCH/stage_marks.txt so per-stage wall-time claims
@@ -1026,47 +1045,41 @@ class CrawlEngine:
             mark("reclaim")
         carry = self._carry
         carry_ok = carry is not None and carry[0] == self.frontier.last_commit()
-        # carry hygiene: the carried scalars assume one stage-result row
-        # per batch row and no link dedup. Rather than trust that forever,
-        # the exact head aggregate re-runs every `compact_every` (or 64)
-        # rounds — a bounded self-healing term — and WEAVER_DEBUG_CARRY=1
-        # asserts carry == aggregate every round (used in tests so drift
-        # fails loudly instead of ending crawls early / running phantom
-        # rounds).
+        # carry hygiene: the carried scalars are exact when a compaction's
+        # rewrite observed them (every round at compact_every=1); between
+        # exact values they are arithmetic that assumes one stage-result
+        # row per batch row and no link dedup. Rather than trust that
+        # forever, the exact head aggregate re-runs once the carry has
+        # gone `compact_every` (or 64) rounds without an exact value — a
+        # bounded self-healing term — and WEAVER_DEBUG_CARRY=1 asserts
+        # carry == aggregate every round (used in tests so drift fails
+        # loudly instead of ending crawls early / running phantom rounds).
         debug_carry = os.environ.get("WEAVER_DEBUG_CARRY") == "1"
         refresh_every = self.compact_every or 64
-        if carry_ok and not debug_carry and round_no % refresh_every != 0:
-            n_pending, max_seq = carry[1], carry[2]
-            if not n_pending:
-                return None  # drained — decided without launching a job
-            state = self._frontier_state().persist()
-            pending = state.where(F.col("status") == STATUS_PENDING)
+        state = self._frontier_state().persist()
+        pending = state.where(F.col("status") == STATUS_PENDING)
+        if carry_ok and not debug_carry and round_no - carry[3] < refresh_every:
+            n_pending, max_seq, exact_round = carry[1], carry[2], carry[3]
             mark("head_carry")
         else:
-            state = self._frontier_state().persist()
-            pending = state.where(F.col("status") == STATUS_PENDING)
             # one driver-side scalar job: pending count + max seq together
-            head = state.agg(
-                F.sum(
-                    F.when(F.col("status") == STATUS_PENDING, 1).otherwise(0)
-                ).alias("n_pending"),
-                F.max("enqueue_seq").alias("max_seq"),
-            ).collect()[0]
+            head = state.agg(*_head_aggs()).collect()[0]
             mark("head_agg")
             n_pending = head["n_pending"] or 0
             max_seq = head["max_seq"] or 0
+            exact_round = round_no
             if carry_ok and debug_carry:
                 assert (n_pending, max_seq) == (carry[1], carry[2]), (
-                    f"carry desync: carried {carry[1:]} vs exact "
+                    f"carry desync: carried {carry[1:3]} vs exact "
                     f"({n_pending}, {max_seq})"
                 )
-            if not n_pending:
-                state.unpersist()
-                return None
+        if not n_pending:
+            state.unpersist()  # drained (a fresh carry decides it with no job)
+            return None
 
         # schedule the batch
         cand = pending
-        n_blocked = 0
+        blocked_updates = None
         if self.mode == "scale" and getattr(self, "_auto_robots", None) is not None:
             # robots cache fill for hosts first seen this round: pending
             # hosts ANTI-JOINED against the cached host set (broadcast —
@@ -1093,23 +1106,15 @@ class CrawlEngine:
         if self.mode == "scale" and self.robots_df is not None:
             # robots enforcement: broadcast join, map-side split — the
             # frontier never shuffles for this. Disallowed rows leave the
-            # pending set with a terminal 'blocked' status delta.
+            # pending set with a terminal 'blocked' status delta, which
+            # rides the round's frontier commit (counted there by an
+            # observation, no job of its own).
             cand, blocked = apply_robots(
                 pending, self.robots_df, self.round_time_budget_ms
             )
-            ucid = self.frontier.last_commit() + 1
-            blocked_updates = (
-                blocked.withColumn("status", F.lit(STATUS_BLOCKED))
-                .withColumn("update_seq", F.lit(ucid).cast("long"))
-                .select(*[f.name for f in FRONTIER_SCHEMA.fields])
-                .persist()
-            )
-            n_blocked = blocked_updates.count()
-            if n_blocked:
-                self.frontier.append(
-                    blocked_updates, meta={"op": "robots_block", "round": round_no}
-                )
-            blocked_updates.unpersist()
+            blocked_updates = blocked.withColumn(
+                "status", F.lit(STATUS_BLOCKED)
+            ).select(*[f.name for f in FRONTIER_SCHEMA.fields])
             mark("robots")
         if self.mode == "scale" and (
             self.host_budget is not None or self.robots_df is not None
@@ -1247,12 +1252,10 @@ class CrawlEngine:
         # Task count (_fetch_partitions): 4x oversubscription only for a
         # big batch; a small one gets one wave, because every Python-
         # worker task pays ~0.27 s of start-up before its first URL. The
-        # pending count less the blocked rows bounds the batch, and both
-        # are driver-side already (no job).
-        n_fetch_parts = _fetch_partitions(
-            n_pending - n_blocked,
-            int(spark.conf.get("spark.sql.shuffle.partitions")),
-        )
+        # pending count bounds the batch and is driver-side already (no
+        # job).
+        shuffle_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
+        n_fetch_parts = _fetch_partitions(n_pending, shuffle_parts)
         salt = F.pmod(F.xxhash64("url"), F.lit(self.salt_buckets))
         if DELAY_MS_COL in fetch_input.columns:
             # crawl-delayed hosts get a CONSTANT salt: all of a delayed
@@ -1282,11 +1285,21 @@ class CrawlEngine:
         # workload's compute/DRAM ratio, which the single-box scaling
         # bench is sensitive to (BENCH/BASELINE.md measures both).
         stage_codec = os.environ.get("WEAVER_STAGE_CODEC", "uncompressed")
-        fetch_input.mapInPandas(self._fetch_fn, STAGE_SCHEMA).write.partitionBy(
-            "sink"
-        ).option("parquet.enable.dictionary", "false").option(
-            "parquet.block.size", str(8 * 1024 * 1024)
-        ).option("compression", stage_codec).mode("overwrite").parquet(stage_dir)
+        # the write observes the batch's enqueue_seq range: every link's
+        # and retry's parent_seq lies in it, so it bounds dense_seq's
+        # buckets before the stats rollup runs (which then counts links
+        # per bucket) — sequencing launches no job of its own
+        seq_obs = Observation()
+        fetch_input.mapInPandas(self._fetch_fn, STAGE_SCHEMA).observe(
+            seq_obs,
+            F.min("enqueue_seq").alias("lo"),
+            F.max("enqueue_seq").alias("hi"),
+        ).write.partitionBy("sink").option(
+            "parquet.enable.dictionary", "false"
+        ).option("parquet.block.size", str(8 * 1024 * 1024)).option(
+            "compression", stage_codec
+        ).mode("overwrite").parquet(stage_dir)
+        seq_bounds = _seq_range(seq_obs.get)
         leaf_dirs = sorted(
             os.path.join(stage_dir, d)
             for d in os.listdir(stage_dir)
@@ -1366,18 +1379,29 @@ class CrawlEngine:
         results = _read_results(meta_dirs)
 
         mark("images_adopt")
-        # ---- stats + metrics in ONE job (r7, guide §2.4 "fewer passes"):
-        # the round's branch-driving scalars (fetched/failed/n_links/...)
-        # are sums over the per-(scan partition, host) metrics groups, so
-        # a single rollup collect replaces the separate global stats
-        # aggregate AND the Spark write job for the metrics table — the
-        # rollup is O(partitions x hosts) rows, committed driver-side via
-        # append_rows (the lineage path: launching a Spark stage to write
-        # a few hundred bookkeeping rows costs ~0.5 s of fixed scheduler
-        # latency per round, a pure serial term in the scaling ratio).
-        grp_rows = (
+        # ---- stats + metrics + link counts in ONE job (r7, guide §2.4
+        # "fewer passes"): the round's branch-driving scalars (fetched/
+        # failed/n_links/...) are sums over the per-(scan partition, host)
+        # metrics groups, so a single rollup collect replaces the separate
+        # global stats aggregate AND the Spark write job for the metrics
+        # table — the rollup is O(partitions x hosts) rows, committed
+        # driver-side via append_rows (the lineage path: launching a Spark
+        # stage to write a few hundred bookkeeping rows costs ~0.5 s of
+        # fixed scheduler latency per round, a pure serial term in the
+        # scaling ratio). A second grouping set counts links per
+        # dense_seq bucket (seq_bucket of the parent seq over the fetch
+        # write's observed range), so sequencing needs no count job.
+        bkt = (
+            seq_bucket("enqueue_seq", seq_bounds, shuffle_parts)
+            if seq_bounds is not None
+            else F.lit(0)  # empty batch: no rows to bucket
+        )
+        rollup = (
             results.withColumn("partition_id", F.spark_partition_id())
-            .groupBy("partition_id", "host")
+            .withColumn("_bkt", bkt)
+            .groupingSets(
+                [["partition_id", "host"], ["_bkt"]], "partition_id", "host", "_bkt"
+            )
             .agg(
                 F.count("*").alias("fetched"),
                 F.sum(
@@ -1388,28 +1412,24 @@ class CrawlEngine:
                 ).alias("failed"),
                 F.sum("bytes_len").alias("bytes"),
                 F.sum("fetch_ms").alias("fetch_ms_sum"),
-                F.sum(F.coalesce(F.size("links"), F.lit(0))).alias("n_links"),
+                # the rows posexplode makes of the links column
+                F.sum(F.coalesce(F.array_size("links"), F.lit(0))).alias("n_links"),
                 # 304 Not Modified: a conditional recrawl row whose stored
                 # payload is still fresh (kept; headers-only cost)
                 F.sum(
                     F.when(F.col("status_code") == 304, 1).otherwise(0)
                 ).alias("revalidated"),
-                # seq range of the fetched rows: every links/retry row's
-                # parent_seq lies in it, so dense_seq_numeric's bounds
-                # ride THIS rollup instead of running their own min/max
-                # job per round (conservative bounds assign identical
-                # seqs — see ranking.dense_seq_numeric)
-                F.min("enqueue_seq").alias("mn_seq"),
-                F.max("enqueue_seq").alias("mx_seq"),
+                F.grouping("_bkt").alias("_by_host"),
             )
             .collect()
         )
+        grp_rows = [r for r in rollup if r["_by_host"]]
+        seq_counts = {r["_bkt"]: r["n_links"] for r in rollup if not r["_by_host"]}
         agg = {
             k: sum(r[k] for r in grp_rows)
             for k in ("fetched", "failed", "n_links", "revalidated")
         }
         agg["payload_rows"] = sum(r["payloads"] for r in grp_rows)
-        seq_bounds = _seq_bounds(grp_rows)
         mark("stats_agg")
         # idempotent on re-run after rollback/crash: a metrics commit for
         # this round that already exists is reused, not duplicated
@@ -1473,16 +1493,24 @@ class CrawlEngine:
                 )
                 .persist()
             )
-            # one tiny keys-only count, only on rounds that saw failures
-            n_retries = retry_rows.count()
+            # one tiny keys-only count per dense_seq bucket, only on
+            # rounds that saw failures: retries are sequenced with the
+            # links, so their counts join the link counts
+            for r in (
+                retry_rows.groupBy(
+                    seq_bucket("parent_seq", seq_bounds, shuffle_parts).alias("_bkt")
+                )
+                .count()
+                .collect()
+            ):
+                seq_counts[r["_bkt"]] = seq_counts.get(r["_bkt"], 0) + r["count"]
+                n_retries += r["count"]
             if not n_retries:
                 retry_rows.unpersist()
                 retry_rows = None
 
         # ---- discovered links -> new frontier rows (FIFO seq assignment)
         new_rows = None
-        seq_pin = None
-        typed = None
         if agg["n_links"] or n_retries:
             typed = None
             if agg["n_links"]:
@@ -1516,21 +1544,20 @@ class CrawlEngine:
                 ).withColumn("attempt", F.lit(0))
             if retry_rows is not None:
                 typed = retry_rows if typed is None else typed.unionByName(retry_rows)
-            # pin the links pipeline ONCE: dense_seq_numeric executes its
-            # input twice (the per-bucket count job, then the frontier
-            # write). In HTTP mode that input carries the resolve pandas
-            # UDF, which the pin keeps to one pass per round. Synthetic
-            # links need no UDF: in a traced crawl_deep round (seeds 1-3)
-            # the round wall was the same with and without the pin, and
-            # the pin saved 16 of the round's 192 tasks. O(round links)
-            # memory.
-            typed = typed.persist()
             # numeric-lead variant (r7): deterministic buckets, no
             # boundary-sampling pass, no pinned intermediate — seqs
-            # identical to dense_seq (see ranking.dense_seq_numeric)
-            with_seq, seq_pin = dense_seq_numeric(
-                typed, ["parent_seq", "link_pos"], start=max_seq + 1,
+            # identical to dense_seq (see ranking.dense_seq_numeric). The
+            # bounds and per-bucket counts are already on the driver, so
+            # it launches no job, and the links pipeline (in HTTP mode,
+            # with its resolve UDF) runs once, inside the frontier write:
+            # nothing to pin.
+            with_seq, _ = dense_seq_numeric(
+                typed,
+                ["parent_seq", "link_pos"],
+                start=max_seq + 1,
+                num_partitions=shuffle_parts,
                 bounds=seq_bounds,
+                counts=seq_counts,
             )
             new_rows = with_seq.select(
                 "url",
@@ -1572,16 +1599,23 @@ class CrawlEngine:
         frontier_delta = done_updates
         if new_rows is not None:
             frontier_delta = new_rows.unionByName(done_updates)
+        n_blocked = 0
+        if blocked_updates is not None:
+            # the round's ONE frontier commit also carries the robots-
+            # blocked rows; the write itself counts them
+            blocked_obs = Observation()
+            is_blocked = F.col("status") == STATUS_BLOCKED
+            frontier_delta = frontier_delta.unionByName(blocked_updates).observe(
+                blocked_obs, F.sum(is_blocked.cast("int")).alias("n")
+            )
         frontier_delta = frontier_delta.withColumn(
             "update_seq", F.lit(ucid).cast("long")
         )
         fr_commit = self.frontier.append(
             frontier_delta, meta={"op": "round", "round": round_no}
         )
-        if seq_pin is not None:
-            seq_pin.unpersist()
-        if typed is not None:
-            typed.unpersist()
+        if blocked_updates is not None:
+            n_blocked = blocked_obs.get["n"] or 0
         if retry_rows is not None:
             retry_rows.unpersist()
         # carry the next round's head scalars: every batch row left the
@@ -1593,6 +1627,7 @@ class CrawlEngine:
             fr_commit,
             n_pending - n_blocked - agg["fetched"] + n_links + n_retries,
             max_seq + n_links + n_retries,
+            exact_round,
         )
 
         mark("frontier_append")
@@ -1653,12 +1688,24 @@ class CrawlEngine:
         # semantics), so it's opt-in.
         if self.compact_every and (round_no + 1) % self.compact_every == 0:
             comp_cid = self.frontier.compact(
-                spark, meta={"round": round_no}, buckets=self.compact_buckets
+                spark,
+                meta={"round": round_no},
+                buckets=self.compact_buckets,
+                observe=_head_aggs(),
             )
-            if self._carry is not None:
+            head = self.frontier.commit_meta(comp_cid).get("observed")
+            if head is not None:
+                # a whole-state rewrite observed the exact head scalars
+                self._carry = (
+                    comp_cid,
+                    head["n_pending"] or 0,
+                    head["max_seq"] or 0,
+                    round_no + 1,
+                )
+            else:
                 # compaction preserves state — rebind the carry to the
                 # new head commit instead of falling back to the agg
-                self._carry = (comp_cid, self._carry[1], self._carry[2])
+                self._carry = (comp_cid, *self._carry[1:])
             mark("compact")
         self._next_round = round_no + 1
         if timing:

@@ -28,7 +28,7 @@ the emitted DDL/procedures are pinned even where they cannot run).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
@@ -234,7 +234,10 @@ class IcebergTable:
         spark: SparkSession,
         meta: dict | None = None,
         buckets: int | None = None,
+        observe: list[Column] | None = None,
     ) -> int:
+        # rewrite_data_files runs inside the procedure: no DataFrame of the
+        # rewrite to observe, so no "observed" meta is recorded
         self._sql(
             f"CALL {self.catalog}.system.rewrite_data_files("
             f"table => '{self.ident}')"

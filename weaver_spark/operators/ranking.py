@@ -80,6 +80,20 @@ def dense_seq(
     return out, part
 
 
+def seq_bucket(
+    lead: Column | str, bounds: tuple[int, int], num_partitions: int
+) -> Column:
+    """The bucket ``dense_seq_numeric`` gives a row: ``num_partitions``
+    equal-width buckets of the numeric ``lead`` over ``bounds`` (lo, hi).
+    A caller that counts rows per bucket inside a job of its own (the
+    ``counts=`` path) buckets with this same expression, so its counts
+    and the sequencer's buckets always agree."""
+    lo, hi = bounds
+    span = max(1, -(-(hi - lo + 1) // num_partitions))  # ceil division
+    col = F.col(lead) if isinstance(lead, str) else lead
+    return F.floor((col.cast("long") - F.lit(lo)) / F.lit(span)).cast("int")
+
+
 def dense_seq_numeric(
     df: DataFrame,
     order_cols: list[str],
@@ -87,17 +101,17 @@ def dense_seq_numeric(
     start: int = 0,
     num_partitions: int | None = None,
     bounds: tuple[int, int] | None = None,
+    counts: dict[int, int] | None = None,
 ) -> tuple[DataFrame, DataFrame | None]:
     """``dense_seq`` for a NUMERIC leading order column (r7).
 
-    Equal-width buckets on the leading column replace
+    Equal-width buckets on the leading column (``seq_bucket``) replace
     ``repartitionByRange``'s boundary sampling: the bucket of a row is a
     pure deterministic function of its key, so there is no sampling
     pass, no per-plan-execution seed, and therefore NO pinned
     intermediate to guard against resampling (the correctness hazard
-    dense_seq's persist exists for). Two tiny jobs — a min/max agg and
-    a per-bucket count agg, both map-side partial with O(buckets)
-    exchanges — then the offset+row_number window rides inside the
+    dense_seq's persist exists for). Offsets come from the row count of
+    each bucket; the offset+row_number window then rides inside the
     consumer's own job. Bucketing only the LEADING column is
     order-preserving for the full key (equal leads stay in one bucket,
     ordered within by the window), so the assigned sequence numbers are
@@ -106,33 +120,36 @@ def dense_seq_numeric(
     parent seqs); a pathological distribution degrades parallelism,
     never correctness. Returns (result, None) — nothing to unpersist.
 
-    ``bounds`` (lo, hi) skips the min/max job when the caller already
-    knows a RANGE COVERING the leading column (the engine derives it
-    from the same rollup that feeds metrics — one fewer fixed job per
-    round). Conservative (wider) bounds are safe: the bucket function
-    stays monotone in the leading column, so per-bucket offsets +
-    in-bucket ordering assign the IDENTICAL sequence numbers; unused
-    sub-ranges only show up as empty buckets.
+    Jobs: at most two tiny ones, both map-side partial with O(buckets)
+    exchanges, and none when the caller knows both inputs:
+
+    - ``bounds`` (lo, hi) skips the min/max job. Any RANGE COVERING the
+      leading column works: conservative (wider) bounds keep the bucket
+      function monotone in the leading column, so per-bucket offsets +
+      in-bucket ordering assign the IDENTICAL sequence numbers; unused
+      sub-ranges only show up as empty buckets.
+    - ``counts`` {bucket: rows of ``df``}, bucketed by ``seq_bucket``
+      with the same ``bounds`` and ``num_partitions``, skips the
+      per-bucket count job (the engine sums them from the round's stats
+      rollup). Buckets missing from it hold no rows; extra zero-count
+      buckets are harmless.
     """
     spark = df.sparkSession
     if num_partitions is None:
         num_partitions = int(spark.conf.get("spark.sql.shuffle.partitions"))
     lead = order_cols[0]
     if bounds is None:
+        assert counts is None, "counts are per bucket of the given bounds"
         row = df.agg(F.min(lead).alias("lo"), F.max(lead).alias("hi")).collect()[0]
         if row["lo"] is None:  # empty input
             return df.withColumn(seq_col, F.lit(start).cast("long")), None
         bounds = (int(row["lo"]), int(row["hi"]))
-    lo, hi = bounds
-    span = max(1, -(-(hi - lo + 1) // num_partitions))  # ceil division
-    bucket = F.floor(
-        (F.col(lead).cast("long") - F.lit(lo)) / F.lit(span)
-    ).cast("int")
-    b = df.withColumn("_bkt", bucket)
-    counts = {
-        r["_bkt"]: r["cnt"]
-        for r in b.groupBy("_bkt").agg(F.count("*").alias("cnt")).collect()
-    }
+    b = df.withColumn("_bkt", seq_bucket(lead, bounds, num_partitions))
+    if counts is None:
+        counts = {
+            r["_bkt"]: r["cnt"]
+            for r in b.groupBy("_bkt").agg(F.count("*").alias("cnt")).collect()
+        }
     offsets, acc = {}, start
     for k in sorted(counts):
         offsets[k] = acc

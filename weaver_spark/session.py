@@ -129,15 +129,11 @@ def get_spark(
     return builder.getOrCreate()
 
 
-def local_df(
-    spark: SparkSession, rows: list[tuple], schema: StructType | str
-) -> DataFrame:
-    """A DataFrame of driver-side ``rows`` (tuples in ``schema`` order;
-    a StructType or a DDL string) planned as a ``LocalTableScan``: the
-    rows travel as one ``pyarrow.Table``, so scanning the result runs no
-    Python worker; an empty one collects without a job, and Catalyst
-    prunes it from joins. Unlike pandas input, a ``pa.Table`` has no
-    silent fallback to a Python RDD."""
+def arrow_table(rows: list[tuple], schema: StructType | str):
+    """Driver-side ``rows`` (tuples in ``schema`` order; a StructType or a
+    DDL string) as a ``pyarrow.Table`` typed by Spark's own Arrow mapping.
+    Rejects a row of the wrong width and a null in a non-nullable column:
+    Arrow does not enforce nullability, and Spark trusts the schema."""
     import pyarrow as pa
     from pyspark.sql.pandas.types import to_arrow_schema
 
@@ -149,8 +145,20 @@ def local_df(
     cols = list(zip(*rows)) if rows else [()] * len(arrow_schema)
     arrays = [pa.array(list(c), type=f.type) for c, f in zip(cols, arrow_schema)]
     for f, a in zip(arrow_schema, arrays):
-        # Arrow does not enforce nullability, and Spark trusts the schema
         if not f.nullable and a.null_count:
             raise ValueError(f"null in non-nullable column {f.name!r}")
-    table = pa.Table.from_arrays(arrays, schema=arrow_schema)
-    return spark.createDataFrame(table, schema)
+    return pa.Table.from_arrays(arrays, schema=arrow_schema)
+
+
+def local_df(
+    spark: SparkSession, rows: list[tuple], schema: StructType | str
+) -> DataFrame:
+    """A DataFrame of driver-side ``rows`` (``arrow_table``'s contract)
+    planned as a ``LocalTableScan``: the rows travel as one
+    ``pyarrow.Table``, so scanning the result runs no Python worker; an
+    empty one collects without a job, and Catalyst prunes it from joins.
+    Unlike pandas input, a ``pa.Table`` has no silent fallback to a
+    Python RDD."""
+    if isinstance(schema, str):
+        schema = DataType.fromDDL(schema)
+    return spark.createDataFrame(arrow_table(rows, schema), schema)
