@@ -58,6 +58,35 @@ def test_plan_shards_matches_reference_at_every_partition_count(spark):
         assert got == ref, f"mismatch at num_partitions={nparts}"
 
 
+@pytest.mark.parametrize("lo, hi", [(0, 10**12), (-(3 << 61), 3 << 61)])
+def test_plan_shards_sparse_ids(spark, lo, hi):
+    """A huge gap in the ids leaves every middle bucket empty and puts
+    each half in one bucket: the weighted prefix sum still equals the
+    single-stream reference, also when the ids span more than 2^63
+    (as hash ids do)."""
+    rnd = random.Random(11)
+    rows = [(i + (hi if i >= 100 else lo), rnd.randint(50, 900)) for i in range(200)]
+    df = spark.createDataFrame(rows, "id long, nbytes long")
+    ref = _reference_plan(rows)
+    for nparts in (1, 8):
+        got = {
+            r.id: (r.byte_offset, r.shard_id)
+            for r in plan_shards(
+                df, "id", "nbytes", BUDGET, num_partitions=nparts
+            ).collect()
+        }
+        assert got == ref, f"mismatch at num_partitions={nparts}"
+
+
+def test_plan_shards_pins_nothing(spark):
+    """Planning caches nothing: no persistent RDD outlives the call."""
+    jsc = spark.sparkContext._jsc
+    df, _ = _docs(spark)
+    before = jsc.getPersistentRDDs().size()
+    plan_shards(df, "id", "nbytes", BUDGET, num_partitions=4).collect()
+    assert jsc.getPersistentRDDs().size() == before
+
+
 def test_shard_manifest_bytes_bounded_by_budget_plus_one_row(spark):
     df, rows = _docs(spark)
     max_row = max(b for _, b in rows)

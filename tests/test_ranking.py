@@ -1,12 +1,12 @@
-"""dense_seq regression: sequence numbers must be exactly start..start+N-1
-(unique, order-preserving) at any partition count. Guards against the
-repartitionByRange per-execution sampling bug that minted duplicate seqs
-and silently dropped frontier rows."""
+"""dense_seq_numeric: sequence numbers must be exactly start..start+N-1
+in the sort order of the key (unique, order-preserving) at any partition
+count, equal to a single-stream ``sorted()`` reference. Guards the
+frontier's FIFO ``enqueue_seq``: a duplicate seq silently drops a
+frontier row."""
 
 from pyspark.sql import functions as F
 
 from weaver_spark.operators.ranking import (
-    dense_seq,
     dense_seq_numeric,
     fifo_order,
     seq_bucket,
@@ -14,7 +14,18 @@ from weaver_spark.operators.ranking import (
 )
 
 
-def test_dense_seq_unique_and_ordered(spark):
+def _reference_seqs(keys, start):
+    """Single-stream reference: ``start + i`` for the i-th key in sorted
+    order, null leads first (as an ascending sort places them)."""
+    order = sorted(keys, key=lambda k: (k[0] is not None, k[0] or 0, *k[1:]))
+    return {k: start + i for i, k in enumerate(order)}
+
+
+def _seqs(out, cols=("parent_seq", "link_pos"), seq_col="enqueue_seq"):
+    return {tuple(r[c] for c in cols): r[seq_col] for r in out.collect()}
+
+
+def test_dense_seq_numeric_unique_and_ordered(spark):
     n = 50_000
     df = spark.range(n).select(
         (F.col("id") * 2654435761 % 1000003).alias("parent_seq"),
@@ -23,30 +34,25 @@ def test_dense_seq_unique_and_ordered(spark):
     ).where(F.lit(True))
     # make (parent_seq, link_pos) a strict total order
     df = df.dropDuplicates(["parent_seq", "link_pos"])
-    expected = df.count()
-    out, pin = dense_seq(df, ["parent_seq", "link_pos"], start=1000, num_partitions=16)
-    rows = out.select("parent_seq", "link_pos", "enqueue_seq").collect()
-    pin.unpersist()
-    assert len(rows) == expected
-    seqs = sorted(r["enqueue_seq"] for r in rows)
-    assert seqs == list(range(1000, 1000 + expected))  # dense, unique
-    by_seq = sorted(rows, key=lambda r: r["enqueue_seq"])
-    keys = [(r["parent_seq"], r["link_pos"]) for r in by_seq]
-    assert keys == sorted(keys)  # order-preserving
+    keys = [(r["parent_seq"], r["link_pos"]) for r in df.collect()]
+    out = dense_seq_numeric(
+        df, ["parent_seq", "link_pos"], start=1000, num_partitions=16
+    )
+    got = _seqs(out)
+    assert len(got) == len(keys)
+    assert sorted(got.values()) == list(range(1000, 1000 + len(keys)))  # dense, unique
+    assert got == _reference_seqs(keys, 1000)  # order-preserving
 
 
-def test_dense_seq_empty(spark):
+def test_dense_seq_numeric_empty(spark):
     df = spark.range(0).select(F.col("id").alias("a"))
-    out, pin = dense_seq(df, ["a"], start=5)
+    out = dense_seq_numeric(df, ["a"], start=5)
     assert out.count() == 0
-    pin.unpersist()
 
 
-def test_dense_seq_numeric_matches_dense_seq(spark):
-    """The r7 bucketed variant must assign IDENTICAL sequence numbers to
-    the sampling-based dense_seq for any numeric-lead total order —
-    including skewed leads (many equal parent_seq values) and at several
-    partition counts."""
+def test_dense_seq_numeric_skewed_lead(spark):
+    """Skewed leads (many equal parent_seq values) at several partition
+    counts: an uneven lead costs parallelism, never correctness."""
     n = 20_000
     df = (
         spark.range(n)
@@ -57,29 +63,30 @@ def test_dense_seq_numeric_matches_dense_seq(spark):
         )
         .dropDuplicates(["parent_seq", "link_pos"])
     )
-    base, pin = dense_seq(df, ["parent_seq", "link_pos"], start=7)
-    expected = {
-        (r["parent_seq"], r["link_pos"]): r["enqueue_seq"]
-        for r in base.collect()
-    }
-    pin.unpersist()
+    expected = _reference_seqs(
+        [(r["parent_seq"], r["link_pos"]) for r in df.collect()], 7
+    )
     for nparts in (1, 4, 16):
-        out, pin2 = dense_seq_numeric(
+        out = dense_seq_numeric(
             df, ["parent_seq", "link_pos"], start=7, num_partitions=nparts
         )
-        assert pin2 is None
-        got = {
-            (r["parent_seq"], r["link_pos"]): r["enqueue_seq"]
-            for r in out.collect()
-        }
-        assert got == expected, f"nparts={nparts}"
+        assert _seqs(out) == expected, f"nparts={nparts}"
 
 
-def test_dense_seq_numeric_empty(spark):
-    df = spark.range(0).select(F.col("id").alias("a"))
-    out, pin = dense_seq_numeric(df, ["a"], start=5)
-    assert out.count() == 0
-    assert pin is None
+def test_dense_seq_numeric_null_leads_first(spark):
+    """Null leads take the first seqs, ordered by the next column; a
+    frame whose every lead is null still gets distinct seqs (its
+    emptiness is decided by the counts, not by the missing min/max)."""
+    rows = [(None, 3), (5, 0), (None, 1), (2, 9), (None, 2), (5, 1)]
+    df = spark.createDataFrame(rows, "parent_seq long, link_pos long")
+    for nparts in (1, 3):
+        out = dense_seq_numeric(
+            df, ["parent_seq", "link_pos"], start=10, num_partitions=nparts
+        )
+        assert _seqs(out) == _reference_seqs(rows, 10), f"nparts={nparts}"
+    nulls = df.where(F.col("parent_seq").isNull())
+    got = _seqs(dense_seq_numeric(nulls, ["parent_seq", "link_pos"], start=4))
+    assert got == {(None, 1): 4, (None, 2): 5, (None, 3): 6}
 
 
 def test_dense_seq_numeric_conservative_bounds(spark):
@@ -98,11 +105,7 @@ def test_dense_seq_numeric_conservative_bounds(spark):
         )
         .dropDuplicates(["parent_seq", "link_pos"])
     )
-    base, _ = dense_seq_numeric(df, ["parent_seq", "link_pos"], start=3)
-    expected = {
-        (r["parent_seq"], r["link_pos"]): r["enqueue_seq"]
-        for r in base.collect()
-    }
+    expected = _seqs(dense_seq_numeric(df, ["parent_seq", "link_pos"], start=3))
     lo, hi = 200, (112 * 5 + 200)
     for bounds in ((lo, hi), (0, 10 * hi), (lo - 1, hi + 999_999)):
         # counts=: per-bucket row counts the caller took in a job of its
@@ -110,15 +113,10 @@ def test_dense_seq_numeric_conservative_bounds(spark):
         bkt = seq_bucket("parent_seq", bounds, 4).alias("b")
         counts = {r["b"]: r["count"] for r in df.groupBy(bkt).count().collect()}
         for kw in ({}, {"num_partitions": 4, "counts": counts}):
-            out, pin = dense_seq_numeric(
+            out = dense_seq_numeric(
                 df, ["parent_seq", "link_pos"], start=3, bounds=bounds, **kw
             )
-            assert pin is None
-            got = {
-                (r["parent_seq"], r["link_pos"]): r["enqueue_seq"]
-                for r in out.collect()
-            }
-            assert got == expected, f"bounds={bounds} {sorted(kw)}"
+            assert _seqs(out) == expected, f"bounds={bounds} {sorted(kw)}"
 
 
 def test_topk_and_fifo(spark):

@@ -52,6 +52,46 @@ def test_stream_enqueue_appends_frontier(spark, tmp_path):
     assert state[2]["enqueue_seq"] == 2
 
 
+def _stream_state(spark, tmp_path, rows):
+    eng = CrawlEngine(spark, str(tmp_path / "wh"), mode="reproduction")
+    drop = str(tmp_path / "drop")
+    _drop(drop, "a.jsonl", rows)
+    q = stream_enqueue(eng, drop, str(tmp_path / "ckpt"), available_now=True)
+    assert q.awaitTermination(240), "stream did not drain in time"
+    state = eng.frontier.latest_state(spark).orderBy("enqueue_seq").collect()
+    return [(r["url"], r["enqueue_seq"]) for r in state]
+
+
+def test_stream_enqueue_message_without_ts_first(spark, tmp_path):
+    """A message without ts sorts first, as an ascending (ts, url) sort
+    places a null ts."""
+    got = _stream_state(spark, tmp_path, [
+        {"url": "http://h1.test/item/1", "ts": "2024-01-01T00:00:01Z"},
+        {"url": "http://h2.test/item/2"},
+        {"url": "http://h0.test/item/0", "ts": "2024-01-01T00:00:00Z"},
+    ])
+    assert got == [
+        ("http://h2.test/item/2", 0),
+        ("http://h0.test/item/0", 1),
+        ("http://h1.test/item/1", 2),
+    ]
+
+
+def test_stream_enqueue_batch_without_any_ts(spark, tmp_path):
+    """A micro-batch in which no message has ts still gets distinct seqs,
+    in url order."""
+    got = _stream_state(spark, tmp_path, [
+        {"url": "http://h2.test/item/2"},
+        {"url": "http://h0.test/item/0"},
+        {"url": "http://h1.test/item/1"},
+    ])
+    assert got == [
+        ("http://h0.test/item/0", 0),
+        ("http://h1.test/item/1", 1),
+        ("http://h2.test/item/2", 2),
+    ]
+
+
 def test_host_sessionize_stateful(spark, tmp_path):
     """applyInPandasWithState sessionizer: session counts match the batch
     gap rule, and state survives a stream restart via the checkpoint."""

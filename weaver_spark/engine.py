@@ -144,6 +144,36 @@ def _seq_range(observed: dict) -> tuple[int, int] | None:
     return observed["lo"], observed["hi"]
 
 
+def _write_stage(df: DataFrame, path: str, partition_col: str) -> None:
+    """Overwrite ``path`` with ``df`` partitioned by ``partition_col``,
+    with the stage files' parquet settings (the fetch stage and its
+    redirect-reconciled split; adopted stage files become the images
+    table's files, row tables keep the session codec).
+
+    Dictionary encoding off: the dominant stage bytes are unique 10-25 KB
+    image payloads — parquet dictionary building hashes every blob for
+    zero dedup value, pure CPU burn at 32-way. block.size 8 MB: the
+    default 128 MB row group grows a >100 MB binary column-chunk buffer
+    per task — G1 humongous allocations (threshold 16 MB at 32 MB
+    regions) that stall all 32 writers; small row groups keep writer
+    buffers in normal regions. Compression off by default: the payload
+    column is already-compressed PNG — snappy on top re-scans every blob
+    for zero ratio on write AND on every downstream stage read (measured
+    25% of crawl wall at 16 cores). Storing pre-compressed media
+    uncompressed is the standard lakehouse practice. ``WEAVER_STAGE_CODEC``
+    overrides it, because the choice moves the workload's compute/DRAM
+    ratio, which the single-box scaling bench is sensitive to
+    (BENCH/BASELINE.md measures both)."""
+    (
+        df.write.partitionBy(partition_col)
+        .option("parquet.enable.dictionary", "false")
+        .option("parquet.block.size", str(8 * 1024 * 1024))
+        .option("compression", os.environ.get("WEAVER_STAGE_CODEC", "uncompressed"))
+        .mode("overwrite")
+        .parquet(path)
+    )
+
+
 def _head_aggs() -> list:
     """The frontier head scalars over the current state: pending count
     and max enqueue_seq. One definition for the head aggregate and for
@@ -984,9 +1014,8 @@ class CrawlEngine:
             winners.unpersist()
             return p_dir, None
         split_dir = p_dir + "-post"
-        stage_codec = os.environ.get("WEAVER_STAGE_CODEC", "uncompressed")
         rows = spark.read.schema(FETCH_RESULT_SCHEMA).parquet(p_dir)
-        (
+        verdict = (
             rows.join(
                 winners.select("enqueue_seq").withColumn("_w", F.lit(True)),
                 "enqueue_seq",
@@ -998,13 +1027,8 @@ class CrawlEngine:
             # are read downstream, so drop their payload bytes instead of
             # rewriting them into the _keep=false split
             .withColumn("bytes", F.when(F.col("_keep"), F.col("bytes")))
-            .write.partitionBy("_keep")
-            .option("parquet.enable.dictionary", "false")
-            .option("parquet.block.size", str(8 * 1024 * 1024))
-            .option("compression", stage_codec)
-            .mode("overwrite")
-            .parquet(split_dir)
         )
+        _write_stage(verdict, split_dir, "_keep")
         winners.unpersist()
         keep_dir = os.path.join(split_dir, "_keep=true")
         lose_dir = os.path.join(split_dir, "_keep=false")
@@ -1268,59 +1292,23 @@ class CrawlEngine:
             ).otherwise(salt)
         fetch_input = fetch_input.repartition(n_fetch_parts, F.col("host"), salt)
         stage_dir = os.path.join(self.stage_root, f"r{round_no:05d}")
-        # dictionary encoding off: the dominant stage bytes are unique
-        # 10-25 KB image payloads — parquet dictionary building hashes
-        # every blob for zero dedup value, pure CPU burn at 32-way.
-        # block.size 8 MB: the default 128 MB row group grows a >100 MB
-        # binary column-chunk buffer per task — G1 humongous allocations
-        # (threshold 16 MB at 32 MB regions) that stall all 32 writers;
-        # small row groups keep writer buffers in normal regions.
-        # compression off by default: the payload column is already-
-        # compressed PNG — snappy on top re-scans every blob for zero
-        # ratio on write AND on every downstream stage read (measured
-        # 25% of crawl wall at 16 cores). Storing pre-compressed media
-        # uncompressed is the standard lakehouse practice; this write
-        # only covers the stage + adopted images files — row tables keep
-        # the session codec. Env-tunable because the choice moves the
-        # workload's compute/DRAM ratio, which the single-box scaling
-        # bench is sensitive to (BENCH/BASELINE.md measures both).
-        stage_codec = os.environ.get("WEAVER_STAGE_CODEC", "uncompressed")
         # the write observes the batch's enqueue_seq range: every link's
         # and retry's parent_seq lies in it, so it bounds dense_seq's
         # buckets before the stats rollup runs (which then counts links
         # per bucket) — sequencing launches no job of its own
         seq_obs = Observation()
-        fetch_input.mapInPandas(self._fetch_fn, STAGE_SCHEMA).observe(
+        fetched = fetch_input.mapInPandas(self._fetch_fn, STAGE_SCHEMA).observe(
             seq_obs,
             F.min("enqueue_seq").alias("lo"),
             F.max("enqueue_seq").alias("hi"),
-        ).write.partitionBy("sink").option(
-            "parquet.enable.dictionary", "false"
-        ).option("parquet.block.size", str(8 * 1024 * 1024)).option(
-            "compression", stage_codec
-        ).mode("overwrite").parquet(stage_dir)
+        )
+        _write_stage(fetched, stage_dir, "sink")
         seq_bounds = _seq_range(seq_obs.get)
         leaf_dirs = sorted(
             os.path.join(stage_dir, d)
             for d in os.listdir(stage_dir)
             if d.startswith("sink=")
         )
-
-        def _read_results(dirs: list[str]) -> DataFrame:
-            if not dirs:
-                return local_df(spark, [], FETCH_RESULT_SCHEMA)
-            df = spark.read.schema(FETCH_RESULT_SCHEMA).parquet(*dirs)
-            if self.max_depth is not None:
-                # depth guard: a page AT the cap is fetched, its links
-                # (depth+1 > cap) are masked out here so the stats agg,
-                # links pass and carry all see one capped link set
-                df = df.withColumn(
-                    "links",
-                    F.when(F.col("depth") < self.max_depth, F.col("links")),
-                )
-            return df
-
-        results = _read_results(leaf_dirs)
         mark("fetch_stage")
 
         # ---- payloads -> images: ADOPT the stage's sink=p files
@@ -1376,7 +1364,19 @@ class CrawlEngine:
             meta_dirs.append(loser_dir)
         if adopted_dir is not None:
             meta_dirs.append(adopted_dir)
-        results = _read_results(meta_dirs)
+        results = (
+            spark.read.schema(FETCH_RESULT_SCHEMA).parquet(*meta_dirs)
+            if meta_dirs
+            else local_df(spark, [], FETCH_RESULT_SCHEMA)
+        )
+        if self.max_depth is not None:
+            # depth guard: a page AT the cap is fetched, its links
+            # (depth+1 > cap) are masked out here so the stats agg,
+            # links pass and carry all see one capped link set
+            results = results.withColumn(
+                "links",
+                F.when(F.col("depth") < self.max_depth, F.col("links")),
+            )
 
         mark("images_adopt")
         # ---- stats + metrics + link counts in ONE job (r7, guide §2.4
@@ -1544,14 +1544,11 @@ class CrawlEngine:
                 ).withColumn("attempt", F.lit(0))
             if retry_rows is not None:
                 typed = retry_rows if typed is None else typed.unionByName(retry_rows)
-            # numeric-lead variant (r7): deterministic buckets, no
-            # boundary-sampling pass, no pinned intermediate — seqs
-            # identical to dense_seq (see ranking.dense_seq_numeric). The
-            # bounds and per-bucket counts are already on the driver, so
-            # it launches no job, and the links pipeline (in HTTP mode,
-            # with its resolve UDF) runs once, inside the frontier write:
-            # nothing to pin.
-            with_seq, _ = dense_seq_numeric(
+            # the bounds and per-bucket counts are already on the driver,
+            # so sequencing launches no job, and the links pipeline (in
+            # HTTP mode, with its resolve UDF) runs once, inside the
+            # frontier write: nothing to pin.
+            with_seq = dense_seq_numeric(
                 typed,
                 ["parent_seq", "link_pos"],
                 start=max_seq + 1,

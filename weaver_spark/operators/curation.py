@@ -19,15 +19,14 @@ Scale notes:
   common-denominator scale (LCM of the bucket heights), so the
   assignment is bit-identical across engines — no float comparisons
   whose last-ulp differences could flip a near-tie.
-- ``plan_shards`` is the textbook distributed prefix sum: range
-  partition on the id (order-preserving, pinned — see the function
-  docstring), per-partition byte subtotals (one tiny agg; the driver
-  sees O(|partitions|) scalars, never rows), exclusive partition
-  offsets as a map literal, then a within-partition cumulative sum.
-  No global single-partition window over the data. The result is
-  invariant to where the range boundaries fall: for a unique id
-  ordering, partition offset + within-partition prefix is the same
-  global exclusive prefix under ANY order-preserving partitioning.
+- ``plan_shards`` is the textbook distributed prefix sum:
+  ``ranking.dense_seq_numeric`` weighted by the row's bytes — equal-
+  width buckets of the id, per-bucket byte subtotals (one tiny agg;
+  the driver sees O(|buckets|) scalars, never rows), exclusive bucket
+  offsets as a map literal, then a within-bucket cumulative sum. No
+  global single-partition window over the data, and nothing pinned.
+  For a unique id ordering, bucket offset + within-bucket prefix is
+  the same global exclusive prefix under ANY order-preserving split.
 - ``pack_shards`` materializes each shard as a deterministic tar via
   ``applyInPandas`` over ``shard_id`` — per-group memory is bounded by
   the shard budget (+ one straddling row), and tar metadata is pinned
@@ -45,10 +44,11 @@ from __future__ import annotations
 import math
 from collections.abc import Sequence
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.text import token_count_col
+from .ranking import dense_seq_numeric
 
 # the usual resolution-bucket set for image-generation training
 ASPECT_BUCKETS: tuple[tuple[int, int], ...] = (
@@ -340,67 +340,22 @@ def plan_shards(
 ) -> DataFrame:
     """Deterministic webdataset-style shard assignment.
 
-    Rows ordered by the (unique) ``id_col`` form one conceptual byte
-    stream; each row's ``byte_offset`` is the exclusive prefix sum of
-    ``bytes_col`` and its shard is ``floor(byte_offset / budget)`` —
+    Rows ordered by the (unique, numeric) ``id_col`` form one conceptual
+    byte stream; each row's ``byte_offset`` is the exclusive prefix sum
+    of ``bytes_col`` and its shard is ``floor(byte_offset / budget)`` —
     contiguous shards of ~budget bytes (a shard can exceed the budget
     by at most one straddling row). Distributed prefix sum, see module
-    docstring; the assignment is invariant to partition count.
-
-    Same execution discipline as ranking.dense_seq (which this
-    mirrors): ``repartitionByRange`` samples boundaries with a
-    per-plan-execution seed, so the partitioned intermediate is
-    PERSISTED before the per-partition subtotals are collected — the
-    pin guarantees the offsets job and the output rows see one
-    boundary assignment. The collect moves O(num_partitions) scalars,
-    never rows. The pinned intermediate stays cached until the session
-    drops it (shard planning is a terminal export pass; callers doing
-    repeated plans can ``.unpersist()`` the input side themselves).
+    docstring; the assignment is invariant to partition count. Two tiny
+    jobs (id range, per-bucket byte sums) move O(num_partitions)
+    scalars to the driver, never rows, and nothing stays cached.
     """
-    if num_partitions is None:
-        num_partitions = int(
-            df.sparkSession.conf.get("spark.sql.shuffle.partitions")
-        )
-    part = (
-        df.repartitionByRange(num_partitions, F.col(id_col))
-        .withColumn("_pid", F.spark_partition_id())
-        .persist()
-    )
-    subtotals = {
-        r["_pid"]: r["_pb"]
-        for r in part.groupBy("_pid")
-        .agg(F.sum(bytes_col).alias("_pb"))
-        .collect()
-    }
-    offsets, acc = {}, 0
-    for pid in sorted(subtotals):
-        offsets[pid] = acc
-        acc += subtotals[pid]
-    if offsets:
-        mapping = F.create_map(
-            *[F.lit(x) for pid_off in offsets.items() for x in pid_off]
-        )
-        offset_expr = F.coalesce(mapping[F.col("_pid")], F.lit(0))
-    else:
-        offset_expr = F.lit(0)
-    wrow = (
-        Window.partitionBy("_pid")
-        .orderBy(id_col)
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    return (
-        part.withColumn(
-            "byte_offset",
-            (
-                offset_expr + F.coalesce(F.sum(bytes_col).over(wrow), F.lit(0))
-            ).cast("long"),
-        )
-        .withColumn(
-            "shard_id",
-            F.floor(F.col("byte_offset") / F.lit(shard_budget)),
-        )
-        .drop("_pid")
-    )
+    return dense_seq_numeric(
+        df,
+        [id_col],
+        seq_col="byte_offset",
+        num_partitions=num_partitions,
+        weight=bytes_col,
+    ).withColumn("shard_id", F.floor(F.col("byte_offset") / F.lit(shard_budget)))
 
 
 def shard_manifest(

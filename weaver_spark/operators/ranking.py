@@ -1,12 +1,14 @@
 """Ordering and per-key budget operators (SURVEY.md W1/W2 + north rule).
 
-- ``dense_seq``: deterministic, partition-count-independent assignment of
-  consecutive sequence numbers in a given sort order — the FIFO
-  ``enqueue_seq`` of the frontier (reference uses UnixNano ids,
-  ``/root/reference/src/queue/main.go:35``, which are racy; determinism
-  requires a derived order — SURVEY.md C5). Implemented scalably: range
-  repartition + per-partition row_number + partition offsets, never a
-  single global window.
+- ``dense_seq_numeric``: the one distributed prefix sum — deterministic,
+  partition-count-independent running sums of a weight in a given sort
+  order. With unit weight it is the frontier's FIFO ``enqueue_seq``
+  (reference uses UnixNano ids, ``/root/reference/src/queue/main.go:35``,
+  which are racy; determinism requires a derived order — SURVEY.md C5);
+  with a byte weight, ``curation.plan_shards``' byte offsets.
+  Implemented scalably: equal-width buckets of the numeric leading
+  column + per-bucket offsets + an in-bucket window, never a single
+  global window.
 - ``topk_per_group``: the reference's link cap per root page
   (``amazonRootHandler.go:33-43`` k=3, ``neweggRootHandler.go:19-24`` k=6).
 - ``budget_rank``: per-host politeness budget as a window rank. The
@@ -24,101 +26,58 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 
-def dense_seq(
-    df: DataFrame,
-    order_cols: list[str],
-    seq_col: str = "enqueue_seq",
-    start: int = 0,
-    num_partitions: int | None = None,
-) -> tuple[DataFrame, DataFrame]:
-    """Assign start, start+1, ... in the total order of ``order_cols``.
-
-    Two jobs over a PINNED (persisted) range-partitioned intermediate:
-    count per partition -> cumulative offsets (tiny driver collect, one
-    row per partition) -> row_number within each partition. No global
-    single-partition window, so this holds at 10^10 rows. ``order_cols``
-    must be a strict total order (ties would make the result
-    nondeterministic).
-
-    Returns (result, pinned): the caller MUST materialize `result`
-    (write/append) and then ``pinned.unpersist()``. The pin is
-    load-bearing correctness, not an optimization: ``repartitionByRange``
-    samples range boundaries with a per-plan-execution seed, so a fresh
-    execution of the same logical plan can assign different partition
-    ids — the collected offsets would then mint duplicate sequence
-    numbers (observed as silently dropped frontier rows). The cache pins
-    one boundary assignment across the offsets job and the output job;
-    partition-level eviction recompute reuses the existing shuffle
-    output, so it cannot resample.
-    """
-    spark = df.sparkSession
-    if num_partitions is None:
-        num_partitions = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    cols = [F.col(c) for c in order_cols]
-    part = (
-        df.repartitionByRange(num_partitions, *cols)
-        .withColumn("_pid", F.spark_partition_id())
-        .persist()
-    )
-    counts = {r["_pid"]: r["cnt"] for r in part.groupBy("_pid").agg(F.count("*").alias("cnt")).collect()}
-    offsets, acc = {}, start
-    for pid in sorted(counts):
-        offsets[pid] = acc
-        acc += counts[pid]
-    if offsets:
-        mapping = F.create_map(
-            *[F.lit(x) for pid_off in offsets.items() for x in pid_off]
-        )
-        offset_expr = F.coalesce(mapping[F.col("_pid")], F.lit(0))
-    else:
-        offset_expr = F.lit(0)  # empty input: no offsets to map
-    w = Window.partitionBy("_pid").orderBy(*cols)
-    out = part.withColumn(
-        seq_col,
-        (F.row_number().over(w) - 1 + offset_expr).cast("long"),
-    ).drop("_pid")
-    return out, part
-
-
 def seq_bucket(
     lead: Column | str, bounds: tuple[int, int], num_partitions: int
 ) -> Column:
     """The bucket ``dense_seq_numeric`` gives a row: ``num_partitions``
-    equal-width buckets of the numeric ``lead`` over ``bounds`` (lo, hi).
-    A caller that counts rows per bucket inside a job of its own (the
+    equal-width buckets of the numeric ``lead`` over ``bounds`` (lo, hi),
+    and bucket -1 for a null lead, which sorts before every other. A
+    caller that sums weights per bucket inside a job of its own (the
     ``counts=`` path) buckets with this same expression, so its counts
     and the sequencer's buckets always agree."""
     lo, hi = bounds
     span = max(1, -(-(hi - lo + 1) // num_partitions))  # ceil division
     col = F.col(lead) if isinstance(lead, str) else lead
-    return F.floor((col.cast("long") - F.lit(lo)) / F.lit(span)).cast("int")
+    return F.coalesce(
+        # in double: monotone in the lead, which is all the buckets need,
+        # and no long overflow when the leads span more than 2^63
+        F.floor((col.cast("double") - F.lit(float(lo))) / F.lit(float(span))).cast(
+            "int"
+        ),
+        F.lit(-1),
+    )
 
 
 def dense_seq_numeric(
     df: DataFrame,
-    order_cols: list[str],
+    order_cols: list[Column | str],
     seq_col: str = "enqueue_seq",
     start: int = 0,
     num_partitions: int | None = None,
     bounds: tuple[int, int] | None = None,
     counts: dict[int, int] | None = None,
-) -> tuple[DataFrame, DataFrame | None]:
-    """``dense_seq`` for a NUMERIC leading order column (r7).
+    weight: str | None = None,
+) -> DataFrame:
+    """Distributed exclusive prefix sum of the ``weight`` column (default
+    1 per row) in the total order of ``order_cols``, whose leading column is
+    numeric: ``seq = start + sum(weight) over the earlier rows``. With
+    unit weight that is start, start+1, ... — the frontier's FIFO
+    ``enqueue_seq``; with a byte weight, ``plan_shards``' byte offsets.
+    ``order_cols`` must be a strict total order (ties would make the
+    result nondeterministic).
 
-    Equal-width buckets on the leading column (``seq_bucket``) replace
-    ``repartitionByRange``'s boundary sampling: the bucket of a row is a
-    pure deterministic function of its key, so there is no sampling
-    pass, no per-plan-execution seed, and therefore NO pinned
-    intermediate to guard against resampling (the correctness hazard
-    dense_seq's persist exists for). Offsets come from the row count of
-    each bucket; the offset+row_number window then rides inside the
-    consumer's own job. Bucketing only the LEADING column is
-    order-preserving for the full key (equal leads stay in one bucket,
-    ordered within by the window), so the assigned sequence numbers are
-    IDENTICAL to dense_seq's. Bucket width assumes the leading column
-    is roughly uniform over [min, max] (the engine's links carry dense
-    parent seqs); a pathological distribution degrades parallelism,
-    never correctness. Returns (result, None) — nothing to unpersist.
+    Equal-width buckets of the leading column (``seq_bucket``) split the
+    rows; a bucket's offset is ``start`` plus the weight of every earlier
+    bucket (one tiny driver collect of per-bucket sums, a map literal),
+    and a window within each bucket adds the weight of the bucket's
+    earlier rows. No global single-partition window, so this holds at
+    10^10 rows. The bucket of a row is a pure function of its key: no
+    boundary sampling, so nothing to pin between the offsets job and
+    the output. Bucketing only the LEADING column is order-preserving
+    for the full key (equal leads share a bucket, ordered within by the
+    window). Null leads sort first, as an ascending sort places them:
+    they share bucket -1. An uneven lead costs parallelism, never
+    correctness.
 
     Jobs: at most two tiny ones, both map-side partial with O(buckets)
     exchanges, and none when the caller knows both inputs:
@@ -128,11 +87,11 @@ def dense_seq_numeric(
       function monotone in the leading column, so per-bucket offsets +
       in-bucket ordering assign the IDENTICAL sequence numbers; unused
       sub-ranges only show up as empty buckets.
-    - ``counts`` {bucket: rows of ``df``}, bucketed by ``seq_bucket``
-      with the same ``bounds`` and ``num_partitions``, skips the
-      per-bucket count job (the engine sums them from the round's stats
-      rollup). Buckets missing from it hold no rows; extra zero-count
-      buckets are harmless.
+    - ``counts`` {bucket: summed weight of ``df``'s rows}, bucketed by
+      ``seq_bucket`` with the same ``bounds`` and ``num_partitions``,
+      skips the per-bucket job (the engine sums them from the round's
+      stats rollup). Buckets missing from it hold no rows; extra
+      zero-count buckets are harmless.
     """
     spark = df.sparkSession
     if num_partitions is None:
@@ -141,30 +100,31 @@ def dense_seq_numeric(
     if bounds is None:
         assert counts is None, "counts are per bucket of the given bounds"
         row = df.agg(F.min(lead).alias("lo"), F.max(lead).alias("hi")).collect()[0]
-        if row["lo"] is None:  # empty input
-            return df.withColumn(seq_col, F.lit(start).cast("long")), None
-        bounds = (int(row["lo"]), int(row["hi"]))
-    b = df.withColumn("_bkt", seq_bucket(lead, bounds, num_partitions))
+        # no non-null lead: every row (if any) falls in the null bucket
+        bounds = (0, 0) if row["lo"] is None else (int(row["lo"]), int(row["hi"]))
+    b = df.withColumn("_bkt", seq_bucket(lead, bounds, num_partitions)).withColumn(
+        "_wt", F.lit(1) if weight is None else F.col(weight)
+    )
     if counts is None:
         counts = {
-            r["_bkt"]: r["cnt"]
-            for r in b.groupBy("_bkt").agg(F.count("*").alias("cnt")).collect()
+            r["_bkt"]: r["w"]
+            for r in b.groupBy("_bkt").agg(F.sum("_wt").alias("w")).collect()
         }
-    offsets, acc = {}, start
+    offsets, acc = [], start
     for k in sorted(counts):
-        offsets[k] = acc
-        acc += counts[k]
-    mapping = F.create_map(
-        *[F.lit(x) for bkt_off in offsets.items() for x in bkt_off]
+        offsets += [F.lit(k), F.lit(acc)]
+        acc += counts[k] or 0  # a bucket whose weights are all null sums to None
+    # empty input: no offsets to map, and no row to give one
+    offset = F.create_map(*offsets)[F.col("_bkt")] if offsets else F.lit(start)
+    earlier = (
+        Window.partitionBy("_bkt")
+        .orderBy(*order_cols)
+        .rowsBetween(Window.unboundedPreceding, -1)
     )
-    w = Window.partitionBy("_bkt").orderBy(*[F.col(c) for c in order_cols])
-    out = b.withColumn(
+    return b.withColumn(
         seq_col,
-        (
-            F.row_number().over(w) - 1 + F.coalesce(mapping[F.col("_bkt")], F.lit(0))
-        ).cast("long"),
-    ).drop("_bkt")
-    return out, None
+        (offset + F.coalesce(F.sum("_wt").over(earlier), F.lit(0))).cast("long"),
+    ).drop("_bkt", "_wt")
 
 
 def topk_per_group(

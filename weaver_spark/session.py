@@ -64,9 +64,12 @@ def get_spark(
         # session's parallelism (never a constant): at cluster scale the
         # natural file/row-group count of a 100 TB table is far above
         # any core count, so the floor is inert there; splits still
-        # cannot cross parquet row groups, so the floor is also bounded
-        # by the writer's row-group size (the explicit _spread
-        # repartition in queries.py covers single-row-group inputs).
+        # cannot cross parquet row groups, so a file with fewer row
+        # groups than splits scans its rows on a few tasks, the other
+        # splits empty. queries._spread does not cover that case: its
+        # guard counts the empty splits too (getNumPartitions), so it
+        # can skip its repartition while the rows sit on a few tasks
+        # (sf1.0 lineitem: 32 splits, 6 of them non-empty).
         .config("spark.sql.files.minPartitionNum", str(shuffle_partitions))
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.adaptive.enabled", "true")

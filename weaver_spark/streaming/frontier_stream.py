@@ -28,6 +28,7 @@ from pyspark.sql.types import StringType
 
 from ..engine import CrawlEngine
 from ..functions.urls import canonicalize_series
+from ..operators.ranking import dense_seq_numeric
 from ..schemas import STATUS_PENDING
 
 ENQUEUE_SCHEMA = "url STRING, url_type STRING, priority INT, ts TIMESTAMP"
@@ -69,13 +70,15 @@ def stream_enqueue(
         # no-op instead of a duplicate append.
         if engine.frontier.find_commit(op="stream_enqueue", batch=batch_id) is not None:
             return
-        from ..operators.ranking import dense_seq
-
         state = engine.frontier.latest_state(spark)
         max_seq = state.agg(F.max("enqueue_seq").alias("m")).collect()[0]["m"]
         start = (max_seq if max_seq is not None else -1) + 1
         canon = batch_df.withColumn("url", _canonicalize_udf(F.col("url")))
-        with_seq, pin = dense_seq(canon, ["ts", "url"], start=start)
+        # the microsecond timestamp is a numeric lead in ts order; a
+        # message without ts sorts first, as in an ascending sort
+        with_seq = dense_seq_numeric(
+            canon, [F.unix_micros("ts"), "url"], start=start
+        )
         ucid = engine.frontier.last_commit() + 1
         rows = with_seq.select(
             "url",
@@ -92,7 +95,6 @@ def stream_enqueue(
             F.lit(ucid).cast("long").alias("update_seq"),
         )
         engine.frontier.append(rows, meta={"op": "stream_enqueue", "batch": batch_id})
-        pin.unpersist()
 
     stream = read_enqueue_stream(spark, drop_dir)
     writer = (
