@@ -38,14 +38,10 @@ def seq_bucket(
     lo, hi = bounds
     span = max(1, -(-(hi - lo + 1) // num_partitions))  # ceil division
     col = F.col(lead) if isinstance(lead, str) else lead
-    return F.coalesce(
-        # in double: monotone in the lead, which is all the buckets need,
-        # and no long overflow when the leads span more than 2^63
-        F.floor((col.cast("double") - F.lit(float(lo))) / F.lit(float(span))).cast(
-            "int"
-        ),
-        F.lit(-1),
-    )
+    # in double: monotone in the lead, which is all the buckets need,
+    # and no long overflow when the leads span more than 2^63
+    bucket = F.floor((col.cast("double") - float(lo)) / float(span)).cast("int")
+    return F.coalesce(bucket, F.lit(-1))
 
 
 def dense_seq_numeric(
